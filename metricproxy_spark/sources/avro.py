@@ -23,9 +23,11 @@ Exposed as the ``avrowire`` DataSource:
   seeks, grouping blocks into ~target-byte splits), so scan
   parallelism tracks data volume even for one huge container file —
   the same splittability contract the sync marker exists for.
-- The writer lands one container file per task with the SAME
-  two-phase commit as the carbonwire sink (staged ``._staged_``
-  names, driver-side rename + ``_SUCCESS``).
+- The writer lands one container file per task.
+- Listing, the exactly-once stream offset (each micro-batch plans its
+  new files with the same block-split plan), the two-phase-commit
+  writer and registration are the shared spool contract
+  (:mod:`metricproxy_spark.sources.spool`).
 
 Longs/strings/booleans/bytes round-trip exactly and doubles are raw
 IEEE bits, so an Avro write→read cycle is value-checkable against a
@@ -40,13 +42,14 @@ import os
 import struct
 import zlib
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
+from pyspark.sql.datasource import DataSource, DataSourceReader
+
+from metricproxy_spark.sources.spool import (
+    SpoolReader,
+    SpoolStreamReader,
+    SpoolWriter,
+    list_files,
+    register,
 )
 
 AVRO_MAGIC = b"Obj\x01"
@@ -326,41 +329,31 @@ def read_avro_rows(path: str) -> list[tuple]:
     return rows
 
 
-def _avro_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if not f.startswith(("_", "."))
-    )
+class AvroBatchReader(SpoolReader):
+    """Groups each file's blocks into ~``split_bytes`` splits of
+    ``(path, first block offset, block count)``."""
 
-
-class AvroBatchReader(DataSourceReader):
     def __init__(self, path: str, split_bytes: int):
-        self._path = path
+        super().__init__(path)
         self._split = max(64 * 1024, split_bytes)
 
-    def partitions(self):
-        parts = []
-        for p in _avro_files(self._path):
-            blocks = index_blocks(p)
+    def plan(self, files: list[str]) -> list:
+        splits = []
+        for p in files:
             group: list = []
             acc = 0
-            for off, n, nbytes in blocks:
+            for off, n, nbytes in index_blocks(p):
                 group.append(off)
                 acc += nbytes
                 if acc >= self._split:
-                    parts.append(InputPartition((p, group[0], len(group))))
+                    splits.append((p, group[0], len(group)))
                     group, acc = [], 0
             if group:
-                parts.append(InputPartition((p, group[0], len(group))))
-        return parts or [InputPartition((None, 0, 0))]
+                splits.append((p, group[0], len(group)))
+        return splits
 
-    def read(self, partition: InputPartition):
-        path, first_off, n_blocks = partition.value
-        if path is None:
-            return
+    def read_split(self, split):
+        path, first_off, n_blocks = split
         with open(path, "rb") as fh:
             hdr, _sync, _ = _read_header(fh)
             schema, codec = hdr["schema"], hdr["codec"]
@@ -379,100 +372,22 @@ class AvroBatchReader(DataSourceReader):
             yield from _decode_block(data, schema, n)
 
 
-class AvroStreamReader(DataSourceStreamReader):
-    """Offset = {"files": N}: the first N sorted container files are
-    consumed — the same checkpointed exactly-once contract as the
-    carbonwire stream (restart replays deterministically from the
-    committed offset). Full (partition-planning) reader: each batch's
-    new files decode as one executor-side partition per file — no
-    driver-side row materialization (same upgrade as the carbonwire
-    and httpwire streams)."""
+class AvroBatchWriter(SpoolWriter):
+    """One container file per task."""
 
-    def __init__(self, path: str):
-        self._path = path
-
-    def initialOffset(self) -> dict:
-        return {"files": 0}
-
-    def latestOffset(self) -> dict:
-        return {"files": len(_avro_files(self._path))}
-
-    def partitions(self, start: dict, end: dict):
-        files = _avro_files(self._path)
-        parts = [
-            InputPartition(p)
-            for p in files[start.get("files", 0) : end.get("files", 0)]
-        ]
-        # An idle poll (start == end) still plans a batch.
-        return parts or [InputPartition(None)]
-
-    def read(self, partition: InputPartition):
-        if partition.value is None:
-            return
-        rdr = AvroBatchReader(partition.value, 1 << 60)  # one split/file
-        for part in rdr.partitions():
-            yield from rdr.read(part)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class _Staged(WriterCommitMessage):
-    def __init__(self, staged: str, final: str):
-        self.staged = staged
-        self.final = final
-
-
-class AvroBatchWriter(DataSourceArrowWriter):
-    """One container file per task, two-phase commit (see the
-    carbonwire sink for the protocol rationale)."""
+    suffix = ".avro"
 
     def __init__(self, path: str, overwrite: bool, spark_schema):
-        import uuid
-
-        self._path = path
-        self._overwrite = overwrite
+        super().__init__(path, overwrite)
         self._schema = spark_schema
-        self._job_id = uuid.uuid4().hex[:12]
 
-    def write(self, iterator) -> WriterCommitMessage:
-        import uuid
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        os.makedirs(self._path, exist_ok=True)
-        final = os.path.join(
-            self._path, f"part-{self._job_id}-{pid:05d}.avro"
-        )
-        staged = os.path.join(
-            self._path, f"._staged_{uuid.uuid4().hex}_{pid:05d}"
-        )
-
+    def write_file(self, staged: str, name: str, batches) -> None:
         def rows():
-            for batch in iterator:
+            for batch in batches:
                 cols = [c.to_pylist() for c in batch.columns]
                 yield from zip(*cols) if cols else ()
 
         write_avro_file(staged, rows(), self._schema)
-        return _Staged(staged=staged, final=final)
-
-    def commit(self, messages) -> None:
-        if self._overwrite:
-            for f in _avro_files(self._path):
-                os.remove(f)
-        for m in messages:
-            os.replace(m.staged, m.final)
-        with open(os.path.join(self._path, "_SUCCESS"), "w") as fh:
-            fh.write("")
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            try:
-                os.remove(m.staged)
-            except FileNotFoundError:
-                pass
 
 
 class AvroContainerDataSource(DataSource):
@@ -481,7 +396,7 @@ class AvroContainerDataSource(DataSource):
         return "avrowire"
 
     def schema(self):
-        files = _avro_files(self.options["path"])
+        files = list_files(self.options["path"])
         if not files:
             raise ValueError("avrowire: no files at path")
         with open(files[0], "rb") as fh:
@@ -501,23 +416,10 @@ class AvroContainerDataSource(DataSource):
     def writer(self, schema, overwrite: bool) -> AvroBatchWriter:
         return AvroBatchWriter(self.options["path"], overwrite, schema)
 
-    def streamReader(self, schema) -> AvroStreamReader:
-        return AvroStreamReader(self.options["path"])
-
-
-_REGISTERED: set[int] = set()
+    def streamReader(self, schema) -> SpoolStreamReader:
+        return SpoolStreamReader(self.reader(schema))
 
 
 def register_avrowire(spark) -> None:
     """Idempotently register the connector on a session."""
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        # Streaming source runner processes can't import this repo when
-        # the driver used a sys.path insert — pickle the module by value
-        # (see pyds.pickle_module_by_value; this module is likewise
-        # self-contained stdlib+pyspark by design).
-        from metricproxy_spark.sources.pyds import pickle_module_by_value
-
-        pickle_module_by_value(__name__)
-        spark.dataSource.register(AvroContainerDataSource)
-        _REGISTERED.add(key)
+    register(spark, AvroContainerDataSource)

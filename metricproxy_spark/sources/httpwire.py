@@ -14,15 +14,14 @@ behaves like any built-in source:
   content_type, src_file)``. ``Content-Encoding: gzip`` bodies are
   decompressed (stdlib zlib — the reference accepts gzipped POSTs),
   ``Content-Length`` is honored.
-- Batch: requests are NOT line-splittable (one JSON body), so the unit
-  of parallelism is the file; files are bin-packed into partitions of
-  ~``chunk_bytes`` (default 8 MB) so a million tiny requests don't
-  become a million tasks, and a handful of huge ones still fan out.
-- Streaming: full ``DataSourceStreamReader`` with offset = number of
-  (sorted) files consumed — newly landed requests are picked up exactly
-  once, replayable from the checkpointed offset (same contract as the
-  carbonwire connector), each batch's files bin-packed into
-  executor-side partitions like the batch reader.
+- Requests are NOT line-splittable (one JSON body), so the unit of
+  parallelism is the file: files are bin-packed into partitions of
+  ~``chunk_bytes`` (default 8 MB), in batch and in every micro-batch
+  alike, so a million tiny requests don't become a million tasks and
+  a handful of huge ones still fan out.
+- Listing, the exactly-once stream offset and registration are the
+  shared spool contract (:mod:`metricproxy_spark.sources.spool`) — the
+  same one the live listener publishes under.
 
 Body PARSING stays in the protocol modules
 (:func:`metricproxy_spark.sources.signalfx.parse_sfx_v2_json`,
@@ -36,16 +35,16 @@ from __future__ import annotations
 
 import gzip
 import os
-import re
 from typing import Tuple
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.types import StringType, StructField, StructType
+
+from metricproxy_spark.sources.spool import (
+    SpoolReader,
+    SpoolStreamReader,
+    register,
+)
 
 SCHEMA = StructType(
     [
@@ -59,27 +58,6 @@ SCHEMA = StructType(
 )
 
 Row = Tuple[str, str, str, str, str, str]
-
-
-def _natural_key(name: str) -> tuple:
-    """Sort key treating digit runs numerically ('req_2' < 'req_10',
-    and mixed-width spool names like req_999999/req_1000000 order by
-    sequence, not lexicographically)."""
-    return tuple(
-        int(part) if part.isdigit() else part
-        for part in re.split(r"(\d+)", os.path.basename(name))
-    )
-
-
-def _list_request_files(path: str) -> list[str]:
-    return sorted(
-        (
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if not f.startswith(("_", "."))
-        ),
-        key=_natural_key,
-    )
 
 
 def parse_http_request(raw: bytes) -> Tuple[str, str, str, str, str]:
@@ -121,95 +99,41 @@ def _read_request_file(path: str) -> Row:
     return parse_http_request(raw) + (os.path.basename(path),)
 
 
-def _read_request_batches(paths):
-    """Decode a partition's request files into ONE Arrow record batch
-    instead of per-row Python tuples (guide §4: each tuple otherwise
-    crosses the worker boundary as a pickled row; a RecordBatch
-    crosses as one Arrow buffer). Same rows, same order."""
-    import pyarrow as pa
-
-    rows = [_read_request_file(p) for p in paths]
-    if not rows:
-        return
-    cols = list(zip(*rows))
-    names = ["body", "method", "path", "query", "content_type", "src_file"]
-    yield pa.RecordBatch.from_arrays(
-        [pa.array(list(c), type=pa.string()) for c in cols], names
-    )
-
-
-class HttpWireBatchReader(DataSourceReader):
+class HttpWireBatchReader(SpoolReader):
     """Bin-packs request files into ~chunk_bytes partitions: the task
     count tracks data VOLUME (like HDFS splits), not request count. A
     single request is never split — its body is one JSON document."""
 
     def __init__(self, path: str, chunk_bytes: int):
-        self._path = path
+        super().__init__(path)
         self._chunk = max(64 * 1024, chunk_bytes)
 
-    def partitions(self):
-        parts: list[InputPartition] = []
+    def plan(self, files: list[str]) -> list:
+        splits: list[tuple] = []
         bucket: list[str] = []
         filled = 0
-        for p in _list_request_files(self._path):
+        for p in files:
             bucket.append(p)
             filled += os.path.getsize(p)
             if filled >= self._chunk:
-                parts.append(InputPartition(tuple(bucket)))
+                splits.append(tuple(bucket))
                 bucket, filled = [], 0
         if bucket:
-            parts.append(InputPartition(tuple(bucket)))
-        return parts or [InputPartition(())]
+            splits.append(tuple(bucket))
+        return splits
 
-    def read(self, partition: InputPartition):
-        yield from _read_request_batches(partition.value)
+    def read_split(self, paths):
+        """Decode a partition's request files into ONE Arrow record
+        batch instead of per-row Python tuples (guide §4: each tuple
+        otherwise crosses the worker boundary as a pickled row; a
+        RecordBatch crosses as one Arrow buffer)."""
+        import pyarrow as pa
 
-
-class HttpWireStreamReader(DataSourceStreamReader):
-    """Offset = {"files": N}: the first N sorted files are consumed.
-    Sorted order makes replay from a checkpointed offset deterministic.
-
-    Full (partition-planning) stream reader: each micro-batch's new
-    request files are bin-packed into ~chunk_bytes ``InputPartition``s
-    decoded ON THE EXECUTORS — the batch reader's parallelism contract,
-    with no per-batch driver materialization of the bodies (the Simple
-    API funnels every row through the driver-side source runner;
-    measured as the bulk of ``addBatch`` on the streamed HTTP
-    pipelines). At cluster scale the spool dir is shared storage,
-    exactly like the file sources."""
-
-    def __init__(self, path: str, chunk_bytes: int = 8 * 1024 * 1024):
-        self._path = path
-        self._chunk = max(64 * 1024, chunk_bytes)
-
-    def initialOffset(self) -> dict:
-        return {"files": 0}
-
-    def latestOffset(self) -> dict:
-        return {"files": len(_list_request_files(self._path))}
-
-    def partitions(self, start: dict, end: dict):
-        files = _list_request_files(self._path)
-        parts: list[InputPartition] = []
-        bucket: list[str] = []
-        filled = 0
-        for p in files[start.get("files", 0) : end.get("files", 0)]:
-            bucket.append(p)
-            filled += os.path.getsize(p)
-            if filled >= self._chunk:
-                parts.append(InputPartition(tuple(bucket)))
-                bucket, filled = [], 0
-        if bucket:
-            parts.append(InputPartition(tuple(bucket)))
-        # An idle poll (start == end) still plans a batch: hand the
-        # engine one no-op partition rather than an empty seq.
-        return parts or [InputPartition(())]
-
-    def read(self, partition: InputPartition):
-        yield from _read_request_batches(partition.value)
-
-    def commit(self, end: dict) -> None:
-        pass
+        cols = list(zip(*(_read_request_file(p) for p in paths)))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(list(c), type=pa.string()) for c in cols],
+            SCHEMA.fieldNames(),
+        )
 
 
 class HttpWireDataSource(DataSource):
@@ -226,11 +150,8 @@ class HttpWireDataSource(DataSource):
             int(self.options.get("chunk_bytes", 8 * 1024 * 1024)),
         )
 
-    def streamReader(self, schema) -> HttpWireStreamReader:
-        return HttpWireStreamReader(
-            self.options["path"],
-            int(self.options.get("chunk_bytes", 8 * 1024 * 1024)),
-        )
+    def streamReader(self, schema) -> SpoolStreamReader:
+        return SpoolStreamReader(self.reader(schema))
 
 
 def format_http_request(
@@ -257,19 +178,6 @@ def format_http_request(
     return head.encode("latin-1") + body
 
 
-_REGISTERED: set[int] = set()
-
-
 def register_httpwire(spark) -> None:
     """Idempotently register the connector on a session."""
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        # Streaming source runner processes can't import this repo when
-        # the driver used a sys.path insert — pickle the module by value
-        # (see pyds.pickle_module_by_value; this module is likewise
-        # self-contained stdlib+pyspark by design).
-        from metricproxy_spark.sources.pyds import pickle_module_by_value
-
-        pickle_module_by_value(__name__)
-        spark.dataSource.register(HttpWireDataSource)
-        _REGISTERED.add(key)
+    register(spark, HttpWireDataSource)

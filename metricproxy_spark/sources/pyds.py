@@ -6,17 +6,17 @@ listener [P: protocol/carbon/carbonlistener.go — Listener]; this module
 packages the same wire format as a native Spark *connector* via the
 PySpark 4 Python Data Source API — so ``spark.read.format("carbonwire")``
 and ``spark.readStream.format("carbonwire")`` work like any built-in
-source, with scan parallelism the planner understands:
+source, with scan parallelism the planner understands. Listing, the
+stream offset, the two-phase-commit writer and registration are the
+shared spool contract (:mod:`metricproxy_spark.sources.spool`); this
+module adds the format:
 
-- Batch: byte-range ``InputPartition`` splits (chunk_bytes option) — a
-  1000-executor cluster saturates on ONE huge wire file just as well as
-  on many, the same contract HDFS text splits give. Per-partition work
-  is a sequential range read: no driver-side collect anywhere.
-- Streaming: full ``DataSourceStreamReader`` with the offset = number
-  of (sorted) files consumed — each micro-batch picks up newly landed
-  files exactly once, replayable from the checkpointed offset, and the
-  batch's files split into executor-side byte-range partitions (same
-  contract as the batch reader; no driver-side row materialization).
+- Splits are byte ranges of ``chunk_bytes`` (default 8 MB), in batch
+  and in every micro-batch alike — a 1000-executor cluster saturates
+  on ONE huge wire file just as well as on many, the same contract
+  HDFS text splits give. Per-partition work is a sequential range
+  read: no driver-side collect anywhere.
+- The writer lands one graphite plaintext ``.carbon`` file per task.
 
 Rows are raw ``(line, src_file)`` — parsing stays in
 :func:`metricproxy_spark.sources.carbon.parse_carbon_lines` so the one
@@ -27,19 +27,16 @@ connector identically.
 from __future__ import annotations
 
 import os
-from typing import Iterator, Tuple
 
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.types import StringType, StructField, StructType
+
+from metricproxy_spark.sources.spool import (
+    SpoolReader,
+    SpoolStreamReader,
+    SpoolWriter,
+    register,
+)
 
 SCHEMA = StructType(
     [
@@ -47,23 +44,6 @@ SCHEMA = StructType(
         StructField("src_file", StringType()),
     ]
 )
-
-
-def _list_wire_files(path: str) -> list[str]:
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if not f.startswith(("_", "."))
-    )
-
-
-def _read_file(path: str) -> Iterator[Tuple[str, str]]:
-    base = os.path.basename(path)
-    with open(path, encoding="utf-8", errors="replace") as fh:
-        for line in fh:
-            line = line.rstrip("\n")
-            if line:
-                yield (line, base)
 
 
 def _read_range_batches(path: str, start: int, end: int):
@@ -107,160 +87,44 @@ def _read_range_batches(path: str, start: int, end: int):
     )
 
 
-class CarbonWireBatchReader(DataSourceReader):
-    """Splits every wire file into byte-range partitions (default 8 MB,
-    ``chunk_bytes`` option), so scan parallelism tracks data VOLUME,
-    not file count — one huge file still fans out across the cluster,
-    the same contract HDFS text splits give. Line ownership follows
-    the classic LineRecordReader rule: a line belongs to the split
-    containing its first byte; a reader starting mid-file discards the
-    partial line before its offset (the previous split emitted it)."""
+class CarbonWireBatchReader(SpoolReader):
+    """Splits every wire file into ``chunk_bytes`` byte ranges (an
+    empty file still gets one), so scan parallelism tracks data VOLUME,
+    not file count."""
 
     def __init__(self, path: str, chunk_bytes: int):
-        self._path = path
+        super().__init__(path)
         self._chunk = max(64 * 1024, chunk_bytes)
 
-    def partitions(self):
-        parts = []
-        for p in _list_wire_files(self._path):
+    def plan(self, files: list[str]) -> list:
+        splits = []
+        for p in files:
             size = os.path.getsize(p)
-            start = 0
-            while start < size or start == 0:
-                parts.append(
-                    InputPartition((p, start, min(start + self._chunk, size)))
-                )
-                start += self._chunk
-                if size == 0:
-                    break
-        return parts
+            for start in range(0, max(size, 1), self._chunk):
+                splits.append((p, start, min(start + self._chunk, size)))
+        return splits
 
-    def read(self, partition: InputPartition):
-        path, start, end = partition.value
-        yield from _read_range_batches(path, start, end)
+    def read_split(self, split):
+        return _read_range_batches(*split)
 
 
-class CarbonWireStreamReader(DataSourceStreamReader):
-    """Offset = {"files": N}: the first N sorted files are consumed.
-    Restart-safe: the offset is checkpointed by the engine, and sorted
-    order makes replay deterministic.
-
-    Full (partition-planning) stream reader, not the Simple driver-side
-    one: each micro-batch's new files split into byte-range
-    ``InputPartition``s read ON THE EXECUTORS — the same scan
-    parallelism and line-ownership contract as the batch reader, and no
-    per-batch driver materialization of the rows (the Simple API
-    funnels every row through the driver-side source runner; measured
-    as the bulk of ``addBatch`` on the streamed wire pipelines). At
-    cluster scale the spool dir is shared storage, exactly like the
-    file sources."""
-
-    def __init__(self, path: str, chunk_bytes: int = 8 * 1024 * 1024):
-        self._path = path
-        self._chunk = max(64 * 1024, chunk_bytes)
-
-    def initialOffset(self) -> dict:
-        return {"files": 0}
-
-    def latestOffset(self) -> dict:
-        return {"files": len(_list_wire_files(self._path))}
-
-    def partitions(self, start: dict, end: dict):
-        files = _list_wire_files(self._path)
-        parts: list[InputPartition] = []
-        for p in files[start.get("files", 0) : end.get("files", 0)]:
-            size = os.path.getsize(p)
-            off = 0
-            while off < size or off == 0:
-                parts.append(
-                    InputPartition((p, off, min(off + self._chunk, size)))
-                )
-                off += self._chunk
-                if size == 0:
-                    break
-        # An idle poll (start == end) still plans a batch: hand the
-        # engine one no-op partition rather than an empty seq.
-        return parts or [InputPartition(None)]
-
-    def read(self, partition: InputPartition):
-        if partition.value is None:
-            return
-        path, start, end = partition.value
-        yield from _read_range_batches(path, start, end)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-@dataclass
-class _StagedFile(WriterCommitMessage):
-    staged: str
-    final: str
-
-
-class CarbonWireBatchWriter(DataSourceArrowWriter):
+class CarbonWireBatchWriter(SpoolWriter):
     """K2 carbon forwarder as a first-class connector sink:
     ``df.write.format("carbonwire").save(path)`` lands graphite
-    plaintext files with the standard two-phase commit — each task
-    writes a uniquely-named ``._staged_`` file and reports it in its
-    commit message; only the driver-side ``commit()`` renames the full
-    set into place (plus a ``_SUCCESS`` marker), so a reader never
-    observes a partial job and failed/speculative task attempts leave
-    only garbage-prefixed files that ``abort()`` removes. One file per
-    partition — at cluster scale the caller sizes output files by
-    repartitioning upstream, exactly like the built-in file sinks.
-    Arrow-batched (``DataSourceArrowWriter``): lines arrive as
-    RecordBatch columns and serialize with one join per batch, not a
-    per-row Python loop. Expects a single ``line`` column (serialize
-    datapoints with
+    plaintext files. Arrow-batched: lines arrive as RecordBatch columns
+    and serialize with one join per batch, not a per-row Python loop.
+    Expects a single ``line`` column (serialize datapoints with
     :func:`metricproxy_spark.sources.carbon.to_carbon_lines`)."""
 
-    def __init__(self, path: str, overwrite: bool):
-        import uuid
+    suffix = ".carbon"
 
-        self._path = path
-        self._overwrite = overwrite
-        # Driver-minted job id, serialized into every task: append-mode
-        # final names embed it so a second job never clobbers a prior
-        # job's committed part files.
-        self._job_id = uuid.uuid4().hex[:12]
-
-    def write(self, iterator) -> WriterCommitMessage:
-        import uuid
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        os.makedirs(self._path, exist_ok=True)
-        final = os.path.join(
-            self._path, f"part-{self._job_id}-{pid:05d}.carbon"
-        )
-        staged = os.path.join(
-            self._path, f"._staged_{uuid.uuid4().hex}_{pid:05d}"
-        )
+    def write_file(self, staged: str, name: str, batches) -> None:
         with open(staged, "w", encoding="utf-8", newline="") as fh:
-            for batch in iterator:
+            for batch in batches:
                 col = batch.column(0).to_pylist()
                 if col:
                     fh.write("\n".join(col))
                     fh.write("\n")
-        return _StagedFile(staged=staged, final=final)
-
-    def commit(self, messages) -> None:
-        if self._overwrite:
-            for f in _list_wire_files(self._path):
-                os.remove(f)
-        for m in messages:
-            os.replace(m.staged, m.final)
-        with open(os.path.join(self._path, "_SUCCESS"), "w") as fh:
-            fh.write("")
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            try:
-                os.remove(m.staged)
-            except FileNotFoundError:
-                pass
 
 
 class CarbonWireDataSource(DataSource):
@@ -277,52 +141,13 @@ class CarbonWireDataSource(DataSource):
             int(self.options.get("chunk_bytes", 8 * 1024 * 1024)),
         )
 
-    def streamReader(self, schema) -> CarbonWireStreamReader:
-        return CarbonWireStreamReader(
-            self.options["path"],
-            int(self.options.get("chunk_bytes", 8 * 1024 * 1024)),
-        )
+    def streamReader(self, schema) -> SpoolStreamReader:
+        return SpoolStreamReader(self.reader(schema))
 
     def writer(self, schema, overwrite: bool) -> CarbonWireBatchWriter:
         return CarbonWireBatchWriter(self.options["path"], overwrite)
 
 
-_REGISTERED: set[int] = set()
-
-
-def pickle_module_by_value(module_name: str) -> None:
-    """Make a self-contained connector module cloudpickle BY VALUE.
-
-    Spark serializes a registered Python DataSource class with
-    cloudpickle. By default an importable class pickles by REFERENCE
-    (module path + name), which executor workers resolve because
-    :func:`metricproxy_spark.io.ensure_package_on_workers` ships the
-    package zip via ``addPyFile`` — but the *streaming source runner*
-    is a separate driver-side Python process that does NOT see
-    SparkFiles/addPyFile paths. If the driver found this repo only via
-    a ``sys.path`` insert (the external driver does exactly that), the
-    runner dies with ``ModuleNotFoundError: metricproxy_spark`` while
-    planning ``readStream``. Registering the module for by-value
-    pickling embeds the class bodies in the pickle itself, so the
-    runner needs no import path at all. Only valid for connector
-    modules that are self-contained (stdlib + pyspark imports only) —
-    both ``pyds`` and ``avro`` keep that invariant on purpose.
-    """
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[module_name])
-    except Exception:
-        # Best-effort: batch reads still work by reference + addPyFile.
-        pass
-
-
 def register_carbonwire(spark) -> None:
     """Idempotently register the connector on a session."""
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        pickle_module_by_value(__name__)
-        spark.dataSource.register(CarbonWireDataSource)
-        _REGISTERED.add(key)
+    register(spark, CarbonWireDataSource)

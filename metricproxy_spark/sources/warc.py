@@ -20,19 +20,15 @@ Spark-first shape:
   crawl precisely so that file-level parallelism saturates any
   cluster. Records stream through a buffered ``gzip.GzipFile`` reader:
   memory is bounded by one record, never one file.
-- **Write**: ``df.write.format("warcwire").save(d)`` with the same
-  two-phase commit as the carbonwire sink (staged files renamed by the
-  driver-side ``commit()``, ``_SUCCESS`` marker, append never
-  clobbers). Each task writes one ``.warc.gz``; each row becomes one
-  gzip-member ``response`` record, after a file-leading ``warcinfo``
-  member — the layout Common Crawl writers produce.
+- **Write**: ``df.write.format("warcwire").save(d)``. Each task
+  writes one ``.warc.gz``; each row becomes one gzip-member
+  ``response`` record, after a file-leading ``warcinfo`` member — the
+  layout Common Crawl writers produce.
 - Payload framing is byte-counted, so bodies containing ``WARC/1.0``
   or CRLF-CRLF sequences round-trip exactly (no sentinel scanning).
 
-The module is deliberately self-contained (stdlib + pyspark imports
-only) so :func:`metricproxy_spark.sources.pyds.pickle_module_by_value`
-can embed it in the DataSource pickle — driver-side runner processes
-need no import path.
+Listing, the two-phase-commit writer and registration are the shared
+spool contract (:mod:`metricproxy_spark.sources.spool`).
 
 Write schema (all strings except ``status``): ``url``, ``warc_date``
 (``YYYY-MM-DDTHH:MM:SSZ``), ``status`` (bigint), ``content_type``,
@@ -46,22 +42,17 @@ import gzip
 import hashlib
 import io
 import os
-from dataclasses import dataclass
 from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from metricproxy_spark.sources.spool import SpoolReader, SpoolWriter, register
 
 READ_SCHEMA = StructType(
     [
@@ -225,29 +216,17 @@ def iter_warc_records(fh, src_file: str) -> Iterator[tuple]:
             )
 
 
-def _list_warc_files(path: str) -> list[str]:
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if not f.startswith(("_", "."))
-    )
-
-
-class WarcBatchReader(DataSourceReader):
+class WarcBatchReader(SpoolReader):
     """One partition per file: gzip members are not byte-range
     splittable, so the file is the honest split unit (web crawls ship
     tens of thousands of ~1 GB WARCs for exactly this reason). Records
     stream through a buffered GzipFile — member boundaries are
     transparent, memory is bounded by a single record."""
 
-    def __init__(self, path: str):
-        self._path = path
+    def plan(self, files: list[str]) -> list:
+        return files
 
-    def partitions(self):
-        return [InputPartition(p) for p in _list_warc_files(self._path)]
-
-    def read(self, partition: InputPartition):
-        path = partition.value
+    def read_split(self, path):
         base = os.path.basename(path)
         opener = gzip.open if path.endswith(".gz") else open
         with opener(path, "rb") as raw:
@@ -255,42 +234,16 @@ class WarcBatchReader(DataSourceReader):
             yield from iter_warc_records(fh, base)
 
 
-@dataclass
-class _StagedWarc(WriterCommitMessage):
-    staged: str
-    final: str
+class WarcBatchWriter(SpoolWriter):
+    """Each partition becomes one ``.warc.gz`` beginning with a
+    warcinfo member, then one gzip-member response record per row."""
 
+    suffix = ".warc.gz"
 
-class WarcBatchWriter(DataSourceArrowWriter):
-    """Two-phase-commit WARC sink (same protocol as the carbonwire
-    sink): tasks stage ``._staged_*`` files, the driver renames the
-    complete set and drops ``_SUCCESS``. Each partition becomes one
-    ``.warc.gz`` beginning with a warcinfo member, then one
-    gzip-member response record per row."""
-
-    def __init__(self, path: str, overwrite: bool):
-        import uuid
-
-        self._path = path
-        self._overwrite = overwrite
-        self._job_id = uuid.uuid4().hex[:12]
-
-    def write(self, iterator) -> WriterCommitMessage:
-        import uuid
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        os.makedirs(self._path, exist_ok=True)
-        name = f"part-{self._job_id}-{pid:05d}.warc.gz"
-        final = os.path.join(self._path, name)
-        staged = os.path.join(
-            self._path, f"._staged_{uuid.uuid4().hex}_{pid:05d}"
-        )
+    def write_file(self, staged: str, name: str, batches) -> None:
         with open(staged, "wb") as fh:
             fh.write(gzip_member(build_warcinfo_record(name)))
-            for batch in iterator:
+            for batch in batches:
                 cols = [batch.column(i).to_pylist() for i in range(5)]
                 for url, date, status, ctype, payload in zip(*cols):
                     fh.write(
@@ -300,23 +253,6 @@ class WarcBatchWriter(DataSourceArrowWriter):
                             )
                         )
                     )
-        return _StagedWarc(staged=staged, final=final)
-
-    def commit(self, messages) -> None:
-        if self._overwrite:
-            for f in _list_warc_files(self._path):
-                os.remove(f)
-        for m in messages:
-            os.replace(m.staged, m.final)
-        with open(os.path.join(self._path, "_SUCCESS"), "w") as fh:
-            fh.write("")
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            try:
-                os.remove(m.staged)
-            except FileNotFoundError:
-                pass
 
 
 class WarcDataSource(DataSource):
@@ -334,15 +270,6 @@ class WarcDataSource(DataSource):
         return WarcBatchWriter(self.options["path"], overwrite)
 
 
-_REGISTERED: set[int] = set()
-
-
 def register_warcwire(spark) -> None:
     """Idempotently register the connector on a session."""
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        from metricproxy_spark.sources.pyds import pickle_module_by_value
-
-        pickle_module_by_value(__name__)
-        spark.dataSource.register(WarcDataSource)
-        _REGISTERED.add(key)
+    register(spark, WarcDataSource)

@@ -22,18 +22,23 @@ processing engine with replay. One body parser
 serves socket bytes, staged files, and live HTTP identically.
 
 Responses mirror the reference: ``"OK"`` for datapoint POSTs, plain
-``OK`` for ``/healthz`` (S7), 404 otherwise. The spool write is atomic
-(tmp + rename) and sequence-numbered under a lock, so concurrent
-client connections never interleave or clobber.
+``OK`` for ``/healthz`` (S7), 404 otherwise. A POST must carry a
+``Content-Length``: the spool stores one sized body per request, so a
+missing length is refused with 411 and a malformed one with 400, and
+neither is spooled. Accepted requests are published through
+:class:`metricproxy_spark.sources.spool.SpoolPublisher` (atomic,
+sequence-numbered, never clobbering), so concurrent connections and
+listener processes sharing one spool never interleave or overwrite.
 """
 
 from __future__ import annotations
 
-import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
+
+from metricproxy_spark.sources.spool import SpoolPublisher
 
 # sfx v2/v1 + collectd write_http + the OTLP/HTTP metrics binding
 # + msgpack/cbor frames (base64 text bodies: the spool is string-typed)
@@ -74,8 +79,15 @@ class _IngestHandler(BaseHTTPRequestHandler):
         if path not in INGEST_PATHS:
             self.send_error(404)
             return
-        clen = int(self.headers.get("Content-Length") or 0)
-        body = self.rfile.read(clen)
+        clen = self.headers.get("Content-Length")
+        if clen is None:
+            self.send_error(411)  # e.g. chunked: no sized body to spool
+            return
+        clen = clen.strip()
+        if not (clen.isascii() and clen.isdigit()):
+            self.send_error(400, "Invalid Content-Length")
+            return
+        body = self.rfile.read(int(clen))
         # Reconstruct the request verbatim (body still gzip-encoded if
         # the client sent it that way) — the httpwire reader owns all
         # decoding, so live and at-rest requests share one code path.
@@ -84,7 +96,7 @@ class _IngestHandler(BaseHTTPRequestHandler):
             f"{k}: {v}\r\n".encode("latin-1")
             for k, v in self.headers.items()
         )
-        self.listener._spool(head + hdrs + b"\r\n" + body)
+        self.listener._accept(head + hdrs + b"\r\n" + body)
         resp = b'"OK"'
         self.send_response(200)
         self.send_header("Content-Type", "application/json")
@@ -107,60 +119,19 @@ class HttpIngestListener:
     ):
         self.spool_dir = spool_dir
         self.host, self.port = host, port
-        self._seq = 0
         self._lock = threading.Lock()
+        self._publisher: SpoolPublisher | None = None
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
         self.accepted = 0
 
-    def _spool(self, raw: bytes) -> None:
+    def _accept(self, raw: bytes) -> None:
+        self._publisher.publish(raw)
         with self._lock:
-            seq = self._seq
-            self._seq += 1
             self.accepted += 1
-        # 12-digit pad: wide enough that the name never widens in
-        # practice, and the stream's offset accounting sorts files
-        # NUMERICALLY anyway (httpwire natural sort), so even a
-        # hypothetical overflow keeps ordering correct.
-        tmp = os.path.join(
-            self.spool_dir, f".tmp_{os.getpid()}_{threading.get_ident()}"
-        )
-        with open(tmp, "wb") as fh:
-            fh.write(raw)
-        # Claim the final name with link(2), which fails on EEXIST —
-        # two listener PROCESSES sharing one spool dir can both resume
-        # the same max seq, and os.replace would silently clobber one
-        # accepted request. On collision, advance past the loser's seq
-        # and retry; the link itself is atomic, so a reader never sees
-        # a partial file.
-        while True:
-            final = os.path.join(self.spool_dir, f"req_{seq:012d}.http")
-            try:
-                os.link(tmp, final)
-                break
-            except FileExistsError:
-                with self._lock:
-                    self._seq = max(self._seq, seq + 1)
-                    seq = self._seq
-                    self._seq += 1
-        os.unlink(tmp)
 
     def start(self) -> tuple[str, int]:
-        os.makedirs(self.spool_dir, exist_ok=True)
-        # Resume the sequence after existing spool files: a RESTARTED
-        # listener must append, never clobber — the stream's offset is
-        # "first N sorted files", so names stay monotonic across
-        # listener generations.
-        existing = [
-            f
-            for f in os.listdir(self.spool_dir)
-            if f.startswith("req_") and f.endswith(".http")
-        ]
-        if existing:
-            self._seq = (
-                max(int(f.split("_")[1].split(".")[0]) for f in existing)
-                + 1
-            )
+        self._publisher = SpoolPublisher(self.spool_dir, "req_", ".http")
         handler = type(
             "_BoundHandler", (_IngestHandler,), {"listener": self}
         )

@@ -25,19 +25,20 @@ Two transports:
 
 from __future__ import annotations
 
-import os
 import socket
 import socketserver
 import threading
 
+from metricproxy_spark.sources.spool import SpoolPublisher
+
 
 class LineSocketListener:
     """Accept newline-delimited wire lines on a real socket and spool
-    them to ``{spool_dir}/lines_{seq:012d}.wire`` files (atomic
-    rename; rotation every ``lines_per_file`` lines, remainder flushed
-    on ``stop``). File names are monotonic so stream offsets ("first N
-    sorted files") survive listener restarts, same contract as the
-    HTTP listener's spool."""
+    them to ``{spool_dir}/lines_{seq:012d}.wire`` files, rotating every
+    ``lines_per_file`` lines and flushing the remainder on ``stop``.
+    Files are published through
+    :class:`metricproxy_spark.sources.spool.SpoolPublisher`, the same
+    atomic, never-clobbering publisher as the HTTP listener's spool."""
 
     def __init__(
         self,
@@ -54,9 +55,9 @@ class LineSocketListener:
         self.host, self.port = host, port
         self.lines_per_file = lines_per_file
         self.accepted_lines = 0
-        self._seq = 0
         self._buf: list[bytes] = []
-        self._lock = threading.Lock()
+        self._lock = threading.RLock()  # flush() runs inside _ingest
+        self._publisher: SpoolPublisher | None = None
         self._server: socketserver.BaseServer | None = None
         self._thread: threading.Thread | None = None
 
@@ -66,36 +67,17 @@ class LineSocketListener:
             self._buf.extend(lines)
             self.accepted_lines += len(lines)
             if len(self._buf) >= self.lines_per_file:
-                self._flush_locked()
-
-    def _flush_locked(self) -> None:
-        if not self._buf:
-            return
-        seq = self._seq
-        self._seq += 1
-        final = os.path.join(self.spool_dir, f"lines_{seq:012d}.wire")
-        tmp = final + f".tmp{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(self._buf) + b"\n")
-        os.replace(tmp, final)  # atomic: a reader never sees a partial
-        self._buf = []
+                self.flush()
 
     def flush(self) -> None:
         with self._lock:
-            self._flush_locked()
+            if self._buf:
+                self._publisher.publish(b"\n".join(self._buf) + b"\n")
+                self._buf = []
 
     # -- lifecycle -----------------------------------------------------
     def start(self) -> tuple[str, int]:
-        os.makedirs(self.spool_dir, exist_ok=True)
-        existing = [
-            f
-            for f in os.listdir(self.spool_dir)
-            if f.startswith("lines_") and f.endswith(".wire")
-        ]
-        if existing:
-            self._seq = (
-                max(int(f.split("_")[1].split(".")[0]) for f in existing) + 1
-            )
+        self._publisher = SpoolPublisher(self.spool_dir, "lines_", ".wire")
         listener = self
 
         if self.mode == "tcp":

@@ -7,7 +7,11 @@ from __future__ import annotations
 import gzip
 import http.client
 import json
+import os
+import socket
 import threading
+
+import pytest
 
 from metricproxy_spark.sources.httpwire import register_httpwire
 from metricproxy_spark.streaming.httplistener import (
@@ -51,6 +55,35 @@ def test_healthz_and_unknown_route(tmp_path):
         status, _ = _post(lis.host, lis.port, "/nope", b"{}")
         assert status == 404
         assert lis.accepted == 0  # neither route spools
+
+
+@pytest.mark.parametrize(
+    "framing, status",
+    [
+        (b"Content-Length: abc\r\n", 400),
+        (b"Content-Length: -1\r\n", 400),
+        (b"Transfer-Encoding: chunked\r\n", 411),
+    ],
+    ids=["non_integer", "negative", "chunked_no_length"],
+)
+def test_post_without_a_valid_content_length_is_refused(
+    tmp_path, framing, status
+):
+    """The spool stores one sized body per request: a POST whose
+    Content-Length is malformed (400) or missing (411) is answered at
+    once and spools nothing."""
+    spool = str(tmp_path / "spool")
+    with HttpIngestListener(spool) as lis:
+        with socket.create_connection((lis.host, lis.port), timeout=10) as s:
+            s.sendall(
+                b"POST /v2/datapoint HTTP/1.1\r\nHost: ingest\r\n"
+                b"Content-Type: application/json\r\n" + framing + b"\r\n"
+            )
+            with s.makefile("rb") as resp:
+                status_line = resp.readline()
+        assert status_line.split()[1] == str(status).encode(), status_line
+        assert lis.accepted == 0
+    assert os.listdir(spool) == []
 
 
 def test_live_post_plain_and_gzip_roundtrip(spark, tmp_path):

@@ -130,9 +130,10 @@ def test_connector_pickles_are_self_contained():
     sees neither addPyFile paths nor the driver's sys.path hacks — a
     by-reference pickle of a connector class dies there with
     ModuleNotFoundError whenever the external driver found this repo
-    via sys.path insertion. Contract: after pickle_module_by_value, a
-    cloudpickle of each connector class must unpickle in a subprocess
-    that CANNOT import metricproxy_spark at all."""
+    via sys.path insertion. Contract: after pickle_by_value, a
+    cloudpickle of each connector class — including its base classes
+    from the shared spool module — must unpickle in a subprocess that
+    CANNOT import metricproxy_spark at all."""
     import base64
     import subprocess
     import sys
@@ -141,13 +142,17 @@ def test_connector_pickles_are_self_contained():
 
     from metricproxy_spark.sources.avro import AvroContainerDataSource
     from metricproxy_spark.sources.httpwire import HttpWireDataSource
-    from metricproxy_spark.sources.pyds import (
-        CarbonWireDataSource,
-        pickle_module_by_value,
-    )
+    from metricproxy_spark.sources.pyds import CarbonWireDataSource
+    from metricproxy_spark.sources.spool import pickle_by_value
+    from metricproxy_spark.sources.warc import WarcDataSource
 
-    for cls in (CarbonWireDataSource, HttpWireDataSource, AvroContainerDataSource):
-        pickle_module_by_value(cls.__module__)
+    for cls in (
+        CarbonWireDataSource,
+        HttpWireDataSource,
+        AvroContainerDataSource,
+        WarcDataSource,
+    ):
+        pickle_by_value(cls)
         blob = base64.b64encode(cloudpickle.dumps(cls)).decode()
         probe = (
             "import base64, sys\n"

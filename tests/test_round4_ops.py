@@ -349,10 +349,26 @@ def test_httplistener_restart_appends_not_clobbers(spark, tmp_path):
 def test_httpwire_file_order_is_numeric_not_lexicographic(tmp_path):
     """Offset accounting is 'first N sorted files' — names with mixed
     digit widths (overflow past the pad, hand-dropped files) must sort
-    by sequence number, not byte order (round-4 ADVICE)."""
-    from metricproxy_spark.sources.httpwire import _list_request_files
+    by sequence number, not byte order (round-4 ADVICE), for every
+    spool connector."""
+    from metricproxy_spark.sources.pyds import CarbonWireBatchReader
+    from metricproxy_spark.sources.spool import list_files
 
     for name in ("req_999999.http", "req_1000000.http", "req_2.http"):
         (tmp_path / name).write_bytes(b"POST / HTTP/1.1\r\n\r\n")
-    got = [f.split("/")[-1] for f in _list_request_files(str(tmp_path))]
+    got = [f.split("/")[-1] for f in list_files(str(tmp_path))]
     assert got == ["req_2.http", "req_999999.http", "req_1000000.http"]
+
+    # carbonwire plans its splits in the same (numeric) offset order
+    wire = tmp_path / "wire"
+    wire.mkdir()
+    names = ("lines_999999999999.wire", "lines_1000000000000.wire", "lines_2.wire")
+    for name in names:
+        (wire / name).write_text("m 1 1\n")
+    parts = CarbonWireBatchReader(str(wire), 1 << 20).partitions()
+    got = [p.value[0].split("/")[-1] for p in parts]
+    assert got == [
+        "lines_2.wire",
+        "lines_999999999999.wire",
+        "lines_1000000000000.wire",
+    ]

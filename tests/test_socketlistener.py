@@ -48,6 +48,60 @@ class TestTcp:
         assert names[: len(first)] == first  # restart never clobbers
         assert _spool_lines(spool) == ["a 1 1", "b 2 2"]
 
+    def test_two_listeners_on_one_spool_never_clobber(self):
+        """Two listeners sharing a spool both resume at seq 0; the
+        publisher's link(2) claim moves the second flush onto the next
+        name instead of overwriting the first listener's file."""
+        spool = tempfile.mkdtemp(prefix="mps_sl_")
+        a = LineSocketListener(spool, mode="tcp")
+        b = LineSocketListener(spool, mode="tcp")
+        with a, b:
+            send_lines_tcp(a.host, a.port, ["a 1 1", "a 2 2"], connections=1)
+            send_lines_tcp(b.host, b.port, ["b 3 3"], connections=1)
+            a.flush()
+            b.flush()
+        assert sorted(os.listdir(spool)) == [
+            "lines_000000000000.wire",
+            "lines_000000000001.wire",
+        ]
+        assert sorted(_spool_lines(spool)) == ["a 1 1", "a 2 2", "b 3 3"]
+
+    def test_reader_never_counts_an_in_flight_file(self, monkeypatch):
+        """Pause the publish between writing the file and giving it its
+        final name: the carbonwire stream must not count (and so never
+        plan, then skip) the in-flight file."""
+        from metricproxy_spark.sources.pyds import CarbonWireDataSource
+
+        spool = tempfile.mkdtemp(prefix="mps_sl_")
+        reader = CarbonWireDataSource({"path": spool}).streamReader(None)
+        seen = []
+
+        def pause(publish):
+            def paused(src, dst):
+                offset = reader.latestOffset()
+                planned = reader.partitions({"files": 0}, offset)
+                seen.append((offset, os.listdir(spool), [p.value for p in planned]))
+                publish(src, dst)
+
+            return paused
+
+        # whichever call makes the file visible under its final name
+        monkeypatch.setattr(os, "link", pause(os.link))
+        monkeypatch.setattr(os, "replace", pause(os.replace))
+        with LineSocketListener(spool, mode="tcp") as l:
+            send_lines_tcp(l.host, l.port, ["x 1 1", "y 2 2"], connections=1)
+            l.flush()
+        (offset, names, planned), = seen
+        assert len(names) == 1  # the in-flight file exists...
+        assert offset == {"files": 0}  # ...but is not counted
+        assert planned == [None]  # only the idle no-op partition
+        end = reader.latestOffset()
+        assert end == {"files": 1}
+        (part,) = reader.partitions({"files": 0}, end)
+        assert os.path.basename(part.value[0]) == "lines_000000000000.wire"
+        rows = [r for b in reader.read(part) for r in b.column(0).to_pylist()]
+        assert rows == ["x 1 1", "y 2 2"]
+
     def test_crlf_and_blank_lines_normalized(self):
         spool = tempfile.mkdtemp(prefix="mps_sl_")
         with LineSocketListener(spool, mode="tcp") as l:
