@@ -129,13 +129,12 @@ def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         # SAME parser as the at-rest/live/streamed query twins.
         # statsd lines carry no timestamp — points are stamped at
         # processing time, the statsd-server contract.
-        from metricproxy_spark.sources.pyds import register_carbonwire
         from metricproxy_spark.sources.statsd import parse_statsd_lines
-
-        register_carbonwire(spark)
-        lines = (
-            spark.readStream.format("carbonwire").option("path", src).load()
+        from metricproxy_spark.streaming.socketlistener import (
+            line_spool_stream,
         )
+
+        lines = line_spool_stream(spark, src)
         parsed = parse_statsd_lines(lines.select("line"))
         mtype_map = (
             F.when(F.col("mtype") == "g", "gauge")
@@ -159,12 +158,11 @@ def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         # wire timestamp truncates to the canonical µs timestamp and
         # tags ride the dimensions map.
         from metricproxy_spark.sources.influx import parse_influx_lines
-        from metricproxy_spark.sources.pyds import register_carbonwire
-
-        register_carbonwire(spark)
-        lines = (
-            spark.readStream.format("carbonwire").option("path", src).load()
+        from metricproxy_spark.streaming.socketlistener import (
+            line_spool_stream,
         )
+
+        lines = line_spool_stream(spark, src)
         typed = parse_influx_lines(lines.select("line"))
         return _canonicalize(
             typed.select(

@@ -1116,12 +1116,14 @@ def ingest_http_listener_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     requests by user_id % 23) so the result is a pure function of the
     events table."""
     import gzip as _gzip
-    import http.client
     import json as _json
 
     from metricproxy_spark.io import ensure_package_on_workers
     from metricproxy_spark.sources.httpwire import register_httpwire
-    from metricproxy_spark.streaming.httplistener import HttpIngestListener
+    from metricproxy_spark.streaming.httplistener import (
+        HttpIngestListener,
+        post_bodies,
+    )
 
     ensure_package_on_workers(spark)
     register_httpwire(spark)
@@ -1140,9 +1142,8 @@ def ingest_http_listener_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.operators.scale import guarded_wire_pandas
 
     pdf = guarded_wire_pandas(ev)  # client-side payload, guard-bounded
-    spool = tempfile.mkdtemp(prefix="mps_http_live_")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
+
+    def requests():
         for req, grp in pdf.groupby("req"):
             grp = grp.sort_values("event_id")
             body = _json.dumps(
@@ -1167,10 +1168,11 @@ def ingest_http_listener_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             if int(req) % 2 == 0:
                 body = _gzip.compress(body)
                 headers["Content-Encoding"] = "gzip"
-            conn.request("POST", "/v2/datapoint", body=body, headers=headers)
-            resp = conn.getresponse()
-            assert resp.status == 200 and resp.read() == b'"OK"'
-        conn.close()
+            yield body, headers
+
+    spool = tempfile.mkdtemp(prefix="mps_http_live_")
+    with HttpIngestListener(spool) as lis:
+        post_bodies(lis.host, lis.port, "/v2/datapoint", requests())
     reqs = spark.read.format("httpwire").option("path", spool).load()
     parsed = parse_sfx_v2_json(reqs, body_col="body")
     return parsed.select(
@@ -1816,7 +1818,6 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator, one series subset: user_id % 13 = 0); the engine side
     (spool scan -> from_json -> explode -> agg) stays distributed."""
     import gzip as _gzip
-    import http.client
 
     from metricproxy_spark.io import ensure_package_on_workers
     from metricproxy_spark.sources.httpwire import register_httpwire
@@ -1825,7 +1826,10 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         otlp_request_json,
         parse_otlp_requests,
     )
-    from metricproxy_spark.streaming.httplistener import HttpIngestListener
+    from metricproxy_spark.streaming.httplistener import (
+        HttpIngestListener,
+        post_bodies,
+    )
 
     ensure_package_on_workers(spark)
     register_httpwire(spark)
@@ -1835,20 +1839,19 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload = [
         r.request for r in guarded_wire_payload(otlp_request_json(ev))
     ]  # client side
-    spool = tempfile.mkdtemp(prefix="mps_otlp_live_")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
+
+    def requests():
         for i, raw in enumerate(payload):
             body = raw.encode()
             headers = {"Content-Type": "application/json"}
             if i % 2 == 0:
                 body = _gzip.compress(body)
                 headers["Content-Encoding"] = "gzip"
-            conn.request("POST", "/v1/metrics", body=body, headers=headers)
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+            yield body, headers
+
+    spool = tempfile.mkdtemp(prefix="mps_otlp_live_")
+    with HttpIngestListener(spool) as lis:
+        post_bodies(lis.host, lis.port, "/v1/metrics", requests())
     reqs = spark.read.format("httpwire").option("path", spool).load()
     return aggregate_otlp(
         parse_otlp_requests(reqs.select(F.col("body").alias("request")))
@@ -3819,10 +3822,13 @@ def ingest_remote_read_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
         )
         resp = conn.getresponse()
-        assert resp.status == 200
-        assert resp.getheader("Content-Encoding") == "snappy"
         blob = resp.read()
         conn.close()
+    # raise, not assert: the check must survive ``python -O``
+    if resp.status != 200 or resp.getheader("Content-Encoding") != "snappy":
+        raise ConnectionError(
+            f"remote read refused: {resp.status} {blob[:200]!r}"
+        )
     payloads = spark.createDataFrame(
         [(bytearray(blob),)], "body binary"
     )

@@ -18,6 +18,21 @@ sinks) end-to-end and returns the per-sink delivery counters — the
 reference's invariant "every sink sees every datapoint exactly once"
 [P: protocol/demultiplexer/demultiplexer.go], checked against
 ``count(*)`` per sink.
+
+One harness serves every query here:
+
+- **Wire in.** A ``stream_*_pipeline`` query that proves a front door
+  pushes its payload through a real listener with the wire's own
+  client, then replays the spool as an exactly-once stream:
+  :func:`_post_http` (``httplistener.post_bodies`` into an
+  ``HttpIngestListener``, read back by ``http_spool_stream``) or
+  :func:`_push_lines` (``socketlistener.send_lines_tcp`` into a
+  ``LineSocketListener``, read back by ``line_spool_stream``).
+- **Run.** :func:`_run_to_memory` runs the stream into a memory sink,
+  checkpointed in ``wd/ckpt``, scopes the state-store width with
+  ``state_partitions``, and removes the workdir ``wd`` on every exit
+  path once the stream has stopped. The fan-out and Delta-commit
+  queries write their own sinks and clean up in a ``finally``.
 """
 
 from __future__ import annotations
@@ -26,11 +41,23 @@ import itertools
 import os
 import shutil
 import tempfile
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metricproxy_spark.queries.ingest import (
+    _GRAPHITE_ORACLE,
+    _INFLUX_ORACLE,
+    _OTLP_LIVE_ORACLE,
+    _STATSD_ORACLE,
+)
 from metricproxy_spark.registry import register
+from metricproxy_spark.streaming.httplistener import (
+    HttpIngestListener,
+    http_spool_stream,
+    post_bodies,
+)
 from metricproxy_spark.streaming.pipeline import ProxyPipeline, SinkSpec
 from metricproxy_spark.streaming.sinks import (
     carbon_sink,
@@ -38,15 +65,20 @@ from metricproxy_spark.streaming.sinks import (
     csv_sink,
     signalfx_sink,
 )
+from metricproxy_spark.streaming.socketlistener import (
+    LineSocketListener,
+    line_spool_stream,
+    send_lines_tcp,
+)
 from metricproxy_spark.streaming.source import (
     read_stream_table,
     stage_stream_source,
+    write_range_split,
 )
 from metricproxy_spark.streaming.stateful import counter_to_rate
 from metricproxy_spark.streaming.windows import (
     session_stats,
     sliding_stats,
-    tumbling_stats,
 )
 
 _SEQ = itertools.count()
@@ -56,13 +88,40 @@ def _workdir() -> str:
     return tempfile.mkdtemp(prefix=f"mps_stream_{os.getpid()}_")
 
 
+def _post_http(
+    spark: SparkSession,
+    wd: str,
+    path: str,
+    requests: Iterable[tuple[bytes, dict[str, str]]],
+) -> DataFrame:
+    """POST ``(body, headers)`` pairs to ``path`` on a live HTTP
+    listener spooling under ``wd``; return the spool as a stream."""
+    spool = os.path.join(wd, "spool")
+    with HttpIngestListener(spool) as lis:
+        post_bodies(lis.host, lis.port, path, requests)
+    return http_spool_stream(spark, spool)
+
+
+def _push_lines(spark: SparkSession, wd: str, lines: list[str]) -> DataFrame:
+    """Push wire lines over loopback TCP into a live line listener
+    spooling under ``wd``; return the spooled ``line`` column as a
+    stream."""
+    spool = os.path.join(wd, "spool")
+    with LineSocketListener(spool, lines_per_file=50_000) as lis:
+        send_lines_tcp(lis.host, lis.port, lines)
+    return line_spool_stream(spark, spool).select("line")
+
+
 def _run_to_memory(
     sdf: DataFrame,
-    checkpoint: str,
+    wd: str,
     mode: str = "complete",
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Run an availableNow streaming query into a memory sink.
+    """Run an availableNow streaming query into a memory sink,
+    checkpointed in ``wd/ckpt``, and remove ``wd`` on every exit path
+    once the stream has stopped (the memory sink keeps the result rows
+    in memory, so the returned table outlives the workdir).
 
     ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` for the
     duration of the run only: a stateful streaming aggregation opens one
@@ -82,19 +141,23 @@ def _run_to_memory(
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(state_partitions)
         )
+    q = None
     try:
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
-            .option("checkpointLocation", checkpoint)
+            .option("checkpointLocation", os.path.join(wd, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
     finally:
+        if q is not None:
+            q.stop()  # no-op once terminated; stops it on an interrupt
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(wd, ignore_errors=True)
     return spark.table(name)
 
 
@@ -136,9 +199,7 @@ def stream_tumbling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # ~12 5-minute windows x handful of event types: key-sized state
-    return _run_to_memory(
-        agg, os.path.join(wd, "ckpt"), state_partitions=8
-    )
+    return _run_to_memory(agg, wd, state_partitions=8)
 
 
 @register(
@@ -166,9 +227,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, length="10 minutes", slide="5 minutes"
     )
     # ~2 windows x handful of event types: key-sized state store
-    return _run_to_memory(
-        agg, os.path.join(wd, "ckpt"), state_partitions=8
-    )
+    return _run_to_memory(agg, wd, state_partitions=8)
 
 
 @register(
@@ -189,10 +248,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = read_stream_table(spark, src)
     deduped = stream.dropDuplicates(["event_id"])
-    return _run_to_memory(
-        deduped, os.path.join(wd, "ckpt"), mode="append",
-        state_partitions=8,
-    )
+    return _run_to_memory(deduped, wd, mode="append", state_partitions=8)
 
 
 @register(
@@ -253,8 +309,7 @@ def stream_counter_to_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("metric", "ts", "value")
     )
     src_dir = os.path.join(wd, "src")
-    os.makedirs(src_dir, exist_ok=True)
-    _write_range_split(counters, "ts", src_dir, num_files=2)
+    write_range_split(counters, "ts", src_dir, num_files=2)
     stream = read_stream_table(spark, src_dir, max_files_per_trigger=1)
     rates = counter_to_rate(stream)
     # The stateful shuffle keys on `metric` (a handful of distinct
@@ -263,14 +318,7 @@ def stream_counter_to_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scope the partition count to the key cardinality for this query
     # only (state-partition count is fixed at first checkpoint, so
     # this also keeps restarts consistent). ~3s saved of a 9s query.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_to_memory(
-            rates, os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_to_memory(rates, wd, mode="append", state_partitions=8)
 
 
 @register(
@@ -290,11 +338,6 @@ def stream_fanout_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink durably wrote, re-counted FROM THE SINK FILES (not the
     in-memory counters), proving every sink saw every datapoint exactly
     once."""
-    wd = _workdir()
-    src = stage_stream_source(
-        spark, sf_dir, "events", os.path.join(wd, "src")
-    )
-    stream = read_stream_table(spark, src)
 
     def normalize(df: DataFrame) -> DataFrame:
         return df.select(
@@ -306,29 +349,37 @@ def stream_fanout_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dimensions"),
         )
 
-    sink_dirs = {
-        name: os.path.join(wd, f"sink_{name}")
-        for name in ("carbon", "csv", "signalfx")
-    }
-    pipe = ProxyPipeline(
-        source=stream,
-        transform=normalize,
-        sinks=[
-            SinkSpec("carbon", carbon_sink(sink_dirs["carbon"], meta_col=None)),
-            SinkSpec("csv", csv_sink(sink_dirs["csv"])),
-            SinkSpec("signalfx", signalfx_sink(path=sink_dirs["signalfx"])),
-        ],
-    )
-    pipe.run_available_now(os.path.join(wd, "ckpt"))
-    rows = [
-        ("carbon", count_rows_in_dir(spark, sink_dirs["carbon"], fmt="text")),
-        ("csv", count_rows_in_dir(spark, sink_dirs["csv"], fmt="csv")),
-        (
-            "signalfx",
-            count_rows_in_dir(spark, sink_dirs["signalfx"], fmt="text"),
-        ),
-    ]
-    shutil.rmtree(wd, ignore_errors=True)
+    wd = _workdir()
+    try:
+        src = stage_stream_source(
+            spark, sf_dir, "events", os.path.join(wd, "src")
+        )
+        sink_dirs = {
+            name: os.path.join(wd, f"sink_{name}")
+            for name in ("carbon", "csv", "signalfx")
+        }
+        pipe = ProxyPipeline(
+            source=read_stream_table(spark, src),
+            transform=normalize,
+            sinks=[
+                SinkSpec(
+                    "carbon", carbon_sink(sink_dirs["carbon"], meta_col=None)
+                ),
+                SinkSpec("csv", csv_sink(sink_dirs["csv"])),
+                SinkSpec(
+                    "signalfx", signalfx_sink(path=sink_dirs["signalfx"])
+                ),
+            ],
+        )
+        pipe.run_available_now(os.path.join(wd, "ckpt"))
+        rows = [
+            (name, count_rows_in_dir(spark, sink_dirs[name], fmt=fmt))
+            for name, fmt in (
+                ("carbon", "text"), ("csv", "csv"), ("signalfx", "text")
+            )
+        ]
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
     return spark.createDataFrame(
         rows, "sink string, datapoints bigint"
     )
@@ -382,42 +433,13 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = session_stats(
         stream, keys=("user_id",), gap="30 minutes", watermark="1 minute"
     )
-    return _run_to_memory(
-        sess, os.path.join(wd, "ckpt"), mode="append",
-        state_partitions=8,
-    )
+    return _run_to_memory(sess, wd, mode="append", state_partitions=8)
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.io import load_table
 
     return load_table(spark, sf_dir, "events")
-
-
-def _write_range_split(
-    df: DataFrame, order_col: str, out_dir: str, num_files: int
-) -> None:
-    """Write df as num_files files, range-partitioned on order_col,
-    with increasing mtimes (micro-batch replay order).
-
-    ONE write job: repartitionByRange yields contiguous ordered ranges
-    (every key in partition i <= every key in partition i+1, equal
-    keys never split) and the writer emits them as part-0000N in
-    partition order — replacing the old cache + approxQuantile probe
-    + one write JOB per range file (measured ~0.5 s of pure staging
-    overhead per extra job, plus the cache materialization). An
-    explicit numPartitions is never coalesced by AQE, so the staged
-    file count stays pinned; an EMPTY input (e.g. the alert true-eval
-    series at sf0.001, where no hour breaches) still stages
-    schema-bearing files, and replay order is all that remains."""
-    from metricproxy_spark.streaming.source import (
-        _bump_part_file_mtimes,
-    )
-
-    df.repartitionByRange(num_files, F.col(order_col)).write.mode(
-        "overwrite"
-    ).parquet(out_dir)
-    _bump_part_file_mtimes(out_dir)
 
 
 @register(
@@ -448,7 +470,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(
         broadcast(customers), stream.user_id == customers.c_custkey
     ).select("event_id", "event_type", "c_name", "c_mktsegment")
-    return _run_to_memory(enriched, os.path.join(wd, "ckpt"), mode="append")
+    return _run_to_memory(enriched, wd, mode="append")
 
 
 @register(
@@ -522,14 +544,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batch. Scope to a modest count for this query (fixed at
     # first checkpoint); a production deployment sizes this to key
     # cardinality x state size instead.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_to_memory(
-            joined, os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_to_memory(joined, wd, mode="append", state_partitions=8)
 
 
 @register(
@@ -612,14 +627,7 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gap_s"
         ),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_to_memory(
-            joined, os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_to_memory(joined, wd, mode="append", state_partitions=8)
 
 
 @register(
@@ -676,9 +684,7 @@ def stream_histogram_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("day"), "event_type", "bin", "cnt"
         )
     )
-    tbl = _run_to_memory(
-        daily, os.path.join(wd, "ckpt"), state_partitions=8
-    )
+    tbl = _run_to_memory(daily, wd, state_partitions=8)
     weekly = tbl.groupBy(
         "event_type", F.date_trunc("week", "day").alias("week"), "bin"
     ).agg(F.sum("cnt").alias("cnt"))
@@ -755,14 +761,9 @@ def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="ts",
     )
     stream = read_stream_table(spark, src, max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        snapshots = _run_to_memory(
-            streaming_topk(stream), os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    snapshots = _run_to_memory(
+        streaming_topk(stream), wd, mode="append", state_partitions=8
+    )
     w = Window.partitionBy("event_type")
     return (
         snapshots.withColumn("_vmax", F.max("version").over(w))
@@ -824,9 +825,7 @@ def stream_alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("value"), 2).alias("worst_value"),
         )
     )
-    return _run_to_memory(
-        agg, os.path.join(wd, "ckpt"), state_partitions=8
-    )
+    return _run_to_memory(agg, wd, state_partitions=8)
 
 
 @register(
@@ -893,12 +892,7 @@ def stream_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Key space is |types|·|hours| (~3.4k) — scope the state store to 8
     # partitions so a vanilla 200-partition session doesn't spin 200
     # state dirs per micro-batch for a few thousand keys.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_to_memory(agg, os.path.join(wd, "ckpt"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_to_memory(agg, wd, state_partitions=8)
 
 
 @register(
@@ -922,17 +916,11 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     live-network streamed result hash-matches the DuckDB batch oracle.
     JSON double repr round-trips IEEE-exactly, which is what makes a
     value-checked live wire possible."""
-    import http.client
     import json as _json
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
-    from metricproxy_spark.sources.signalfx import parse_sfx_v2_json
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
-
     from metricproxy_spark.operators.scale import guarded_wire_pandas
+    from metricproxy_spark.sources.signalfx import parse_sfx_v2_json
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -947,9 +935,8 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("user_id") % 11).alias("req"),
         )
     )
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
+
+    def requests():
         for _req, grp in pdf.groupby("req"):
             grp = grp.sort_values("event_id")
             body = _json.dumps(
@@ -962,41 +949,31 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ]
                 }
             ).encode()
-            conn.request(
-                "POST",
-                "/v2/datapoint",
-                body=body,
-                headers={"Content-Type": "application/json"},
-            )
-            assert conn.getresponse().read() == b'"OK"'
-        conn.close()
-        parsed = parse_sfx_v2_json(
-            http_spool_stream(spark, spool), body_col="body"
-        )
-        agg = parsed.groupBy(F.col("metric")).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(27,4)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        # ~5 metric keys: scope the state-store width (200 default
-        # partitions would spin 200 state dirs for 5 keys)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-            result = spark.createDataFrame(
-                out.collect(), "metric string, n bigint, sum_value double"
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+            yield body, {"Content-Type": "application/json"}
+
+    parsed = parse_sfx_v2_json(
+        _post_http(spark, wd, "/v2/datapoint", requests()), body_col="body"
+    )
+    agg = parsed.groupBy(F.col("metric")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(27,4)"))
+        .cast("double")
+        .alias("sum_value"),
+    )
+    # ~5 metric keys: scope the state-store width (200 default
+    # partitions would spin 200 state dirs for 5 keys)
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.collect(), "metric string, n bigint, sum_value double"
+    )
 
 
 @register(
     "stream_statsd_pipeline",
-    oracle=None,  # set just below to share the batch twin's SQL
+    # the batch twin's SQL on the 1/3 subset the wire carries
+    oracle=_STATSD_ORACLE.replace(
+        "FROM events", "FROM events WHERE event_id % 3 = 0"
+    ),
 )
 def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The statsd front door fully STREAMED: wire lines pushed over
@@ -1010,19 +987,13 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the micro-batched listener pipeline with per-batch state in
     the store, not the driver."""
     from metricproxy_spark.io import ensure_package_on_workers, load_table
-    from metricproxy_spark.sources.pyds import register_carbonwire
     from metricproxy_spark.sources.statsd import (
         aggregate_statsd,
         parse_statsd_lines,
         statsd_wire_lines,
     )
-    from metricproxy_spark.streaming.socketlistener import (
-        LineSocketListener,
-        send_lines_tcp,
-    )
 
     ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_id") % 3 == 0
@@ -1035,18 +1006,7 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.select(statsd_wire_lines(ev).alias("line"))
         )
     ]
-    spool = os.path.join(wd, "spool")
-    os.makedirs(spool, exist_ok=True)
-    with LineSocketListener(
-        spool, mode="tcp", lines_per_file=50_000
-    ) as lis:
-        send_lines_tcp(lis.host, lis.port, payload)
-    lines = (
-        spark.readStream.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    lines = _push_lines(spark, wd, payload)
     parsed = parse_statsd_lines(lines)
     # Streaming disallows count_distinct: the STREAMING agg groups by
     # (name, mtype, member) — set members dedup into state keys, so
@@ -1060,45 +1020,27 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("scaled").alias("total_dec"),
     )
     # ~100 (name, type) keys: scope the state-store width
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(pre, os.path.join(wd, "ckpt"))
-        rolled = out.groupBy("name", "mtype").agg(
-            F.sum("n_l").cast("bigint").alias("n_lines"),
-            F.sum("total_dec").cast("double").alias("total"),
-            F.when(
-                F.first("mtype") == "s", F.count("member")
-            ).alias("n_members"),
-        )
-        result = spark.createDataFrame(
-            rolled.collect(),
-            "name string, mtype string, n_lines bigint,"
-            " total double, n_members bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
-
-
-def _share_statsd_oracle() -> None:
-    from metricproxy_spark.queries.ingest import _STATSD_ORACLE
-    from metricproxy_spark.registry import ORACLES
-
-    # the streamed twin pushes the deterministic 1/3 subset through
-    # the wire; same oracle SQL with the matching predicate
-    ORACLES["stream_statsd_pipeline"] = _STATSD_ORACLE.replace(
-        "FROM events", "FROM events WHERE event_id % 3 = 0"
+    out = _run_to_memory(pre, wd, state_partitions=8)
+    rolled = out.groupBy("name", "mtype").agg(
+        F.sum("n_l").cast("bigint").alias("n_lines"),
+        F.sum("total_dec").cast("double").alias("total"),
+        F.when(
+            F.first("mtype") == "s", F.count("member")
+        ).alias("n_members"),
     )
-
-
-_share_statsd_oracle()
+    return spark.createDataFrame(
+        rolled.collect(),
+        "name string, mtype string, n_lines bigint,"
+        " total double, n_members bigint",
+    )
 
 
 @register(
     "stream_influx_pipeline",
-    oracle=None,  # set just below to share the batch twin's SQL
+    # the batch twin's SQL on the 1/3 subset the wire carries
+    oracle=_INFLUX_ORACLE.replace(
+        "FROM events", "FROM events WHERE event_id % 3 = 0"
+    ),
 )
 def stream_influx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Influx line protocol fully STREAMED (see stream_statsd_pipeline
@@ -1113,14 +1055,8 @@ def stream_influx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         influx_wire_lines,
         parse_influx_lines,
     )
-    from metricproxy_spark.sources.pyds import register_carbonwire
-    from metricproxy_spark.streaming.socketlistener import (
-        LineSocketListener,
-        send_lines_tcp,
-    )
 
     ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_id") % 3 == 0
@@ -1133,50 +1069,23 @@ def stream_influx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.select(influx_wire_lines(ev).alias("line"))
         )
     ]
-    spool = os.path.join(wd, "spool")
-    os.makedirs(spool, exist_ok=True)
-    with LineSocketListener(
-        spool, mode="tcp", lines_per_file=50_000
-    ) as lis:
-        send_lines_tcp(lis.host, lis.port, payload)
-    lines = (
-        spark.readStream.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    lines = _push_lines(spark, wd, payload)
     agg = aggregate_influx(parse_influx_lines(lines))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.collect(),
-            "measurement string, host string, n_points bigint,"
-            " sum_value double, sum_count bigint,"
-            " min_ts_ns bigint, max_ts_ns bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
-
-
-def _share_influx_oracle() -> None:
-    from metricproxy_spark.queries.ingest import _INFLUX_ORACLE
-    from metricproxy_spark.registry import ORACLES
-
-    ORACLES["stream_influx_pipeline"] = _INFLUX_ORACLE.replace(
-        "FROM events", "FROM events WHERE event_id % 3 = 0"
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.collect(),
+        "measurement string, host string, n_points bigint,"
+        " sum_value double, sum_count bigint,"
+        " min_ts_ns bigint, max_ts_ns bigint",
     )
-
-
-_share_influx_oracle()
 
 
 @register(
     "stream_graphite_pipeline",
-    oracle=None,  # set just below to share the batch twin's SQL
+    # the batch twin's SQL on the 1/3 subset the wire carries
+    oracle=_GRAPHITE_ORACLE.replace(
+        "FROM events", "FROM events WHERE event_id % 3 = 0"
+    ),
 )
 def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graphite tagged-carbon fully STREAMED (the transport chain of
@@ -1192,14 +1101,8 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         graphite_wire_lines,
         parse_graphite_lines,
     )
-    from metricproxy_spark.sources.pyds import register_carbonwire
-    from metricproxy_spark.streaming.socketlistener import (
-        LineSocketListener,
-        send_lines_tcp,
-    )
 
     ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") % 3 == 0)
     from metricproxy_spark.operators.scale import guarded_wire_payload
@@ -1210,16 +1113,7 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.select(graphite_wire_lines(ev).alias("line"))
         )
     ]
-    spool = os.path.join(wd, "spool")
-    os.makedirs(spool, exist_ok=True)
-    with LineSocketListener(spool, mode="tcp", lines_per_file=50_000) as lis:
-        send_lines_tcp(lis.host, lis.port, payload)
-    lines = (
-        spark.readStream.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    lines = _push_lines(spark, wd, payload)
     parsed = parse_graphite_lines(lines)
     pre = parsed.groupBy(
         "name", F.col("tags").getItem("host").alias("host")
@@ -1229,44 +1123,22 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_sec").alias("min_t"),
         F.max("ts_sec").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(pre, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "name",
-                "host",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_sec"),
-                F.col("max_t").alias("max_ts_sec"),
-            ).collect(),
-            "name string, host string, n_points bigint, sum_value double,"
-            " min_ts_sec bigint, max_ts_sec bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
-
-
-def _share_graphite_oracle() -> None:
-    from metricproxy_spark.queries.ingest import _GRAPHITE_ORACLE
-    from metricproxy_spark.registry import ORACLES
-
-    ORACLES["stream_graphite_pipeline"] = _GRAPHITE_ORACLE.replace(
-        "FROM events", "FROM events WHERE event_id % 3 = 0"
+    out = _run_to_memory(pre, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "name",
+            "host",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_sec"),
+            F.col("max_t").alias("max_ts_sec"),
+        ).collect(),
+        "name string, host string, n_points bigint, sum_value double,"
+        " min_ts_sec bigint, max_ts_sec bigint",
     )
 
 
-_share_graphite_oracle()
-
-
-@register(
-    "stream_otlp_pipeline",
-    oracle=None,  # set just below to share the live-batch twin's SQL
-)
+@register("stream_otlp_pipeline", oracle=_OTLP_LIVE_ORACLE)
 def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OTLP fully STREAMED: the OTLP/JSON requests of the live twin
     POSTed over real loopback HTTP to `/v1/metrics`, the accepted
@@ -1281,16 +1153,10 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver-evidence note: pinned at the head of the round-7
     _PRIORITY window.
     """
-    import http.client
-
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.sources.otlp import (
         otlp_request_json,
         parse_otlp_requests,
-    )
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
     )
 
     ensure_package_on_workers(spark)
@@ -1303,22 +1169,10 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload = [
         r.request for r in guarded_wire_payload(otlp_request_json(ev))
     ]
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for raw in payload:
-            conn.request(
-                "POST",
-                "/v1/metrics",
-                body=raw.encode(),
-                headers={"Content-Type": "application/json"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+    headers = {"Content-Type": "application/json"}
+    requests = ((raw.encode(), headers) for raw in payload)
     points = parse_otlp_requests(
-        http_spool_stream(spark, spool).select(
+        _post_http(spark, wd, "/v1/metrics", requests).select(
             F.col("body").alias("request")
         )
     )
@@ -1328,37 +1182,20 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ns").alias("min_t"),
         F.max("ts_ns").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "name",
-                "mtype",
-                "host",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ns"),
-                F.col("max_t").alias("max_ts_ns"),
-            ).collect(),
-            "name string, mtype string, host string, n_points bigint,"
-            " sum_value double, min_ts_ns bigint, max_ts_ns bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
-
-
-def _share_otlp_oracle() -> None:
-    from metricproxy_spark.queries.ingest import _OTLP_LIVE_ORACLE
-    from metricproxy_spark.registry import ORACLES
-
-    ORACLES["stream_otlp_pipeline"] = _OTLP_LIVE_ORACLE
-
-
-_share_otlp_oracle()
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "name",
+            "mtype",
+            "host",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ns"),
+            F.col("max_t").alias("max_ts_ns"),
+        ).collect(),
+        "name string, mtype string, host string, n_points bigint,"
+        " sum_value double, min_ts_ns bigint, max_ts_ns bigint",
+    )
 
 
 @register(
@@ -1399,15 +1236,8 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact sums in complete mode — the streamed result
     hash-matches the batch DuckDB oracle because JSON double repr
     round-trips IEEE-exactly. Deterministic 1/5 events subset."""
-    import http.client
-    import json as _json
-
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.sources.collectd import parse_collectd_json
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -1447,43 +1277,30 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("user_id") % 11).alias("req"),
         )
     )
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for _req, grp in pdf.groupby("req"):
-            grp = grp.sort_values("event_id")
-            body = ("[" + ",".join(grp["elem"]) + "]").encode()
-            conn.request(
-                "POST",
-                "/post-collectd",
-                body=body,
-                headers={"Content-Type": "application/json"},
-            )
-            assert conn.getresponse().read() == b'"OK"'
-        conn.close()
-        parsed = parse_collectd_json(
-            http_spool_stream(spark, spool), body_col="body"
+    requests = (
+        (
+            ("[" + ",".join(grp.sort_values("event_id")["elem"]) + "]")
+            .encode(),
+            {"Content-Type": "application/json"},
         )
-        agg = parsed.groupBy("metric", "metric_type").agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum(F.col("value").cast("decimal(27,4)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        # 6 (metric, type) keys: scope the state-store width
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-            result = spark.createDataFrame(
-                out.collect(),
-                "metric string, metric_type string, n_points bigint,"
-                " sum_value double",
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+        for _req, grp in pdf.groupby("req")
+    )
+    parsed = parse_collectd_json(
+        _post_http(spark, wd, "/post-collectd", requests), body_col="body"
+    )
+    agg = parsed.groupBy("metric", "metric_type").agg(
+        F.count(F.lit(1)).alias("n_points"),
+        F.sum(F.col("value").cast("decimal(27,4)"))
+        .cast("double")
+        .alias("sum_value"),
+    )
+    # 6 (metric, type) keys: scope the state-store width
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.collect(),
+        "metric string, metric_type string, n_points bigint,"
+        " sum_value double",
+    )
 
 
 @register(
@@ -1513,15 +1330,9 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact sums in complete mode. One parser + registry, two
     transports, one oracle; deterministic 1/4 events subset."""
     from metricproxy_spark.io import ensure_package_on_workers, load_table
-    from metricproxy_spark.sources.pyds import register_carbonwire
     from metricproxy_spark.sources.signalfx import parse_sfx_v1_json
-    from metricproxy_spark.streaming.socketlistener import (
-        LineSocketListener,
-        send_lines_tcp,
-    )
 
     ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") % 4 == 0)
     line = F.to_json(
@@ -1539,20 +1350,11 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.line
         for r in guarded_wire_payload(ev.select(line.alias("line")))
     ]
-    spool = os.path.join(wd, "spool")
-    os.makedirs(spool, exist_ok=True)
-    with LineSocketListener(spool, mode="tcp", lines_per_file=50_000) as lis:
-        send_lines_tcp(lis.host, lis.port, payload)
     registry = spark.createDataFrame(
         [("error", "counter"), ("purchase", "cumulative_counter")],
         "sf_metric string, metric_type string",
     )
-    lines = (
-        spark.readStream.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    lines = _push_lines(spark, wd, payload)
     parsed = parse_sfx_v1_json(lines, registry)
     agg = parsed.groupBy("metric", "source", "metric_type").agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -1561,19 +1363,12 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_value"),
     )
     # ~15 (metric, source) keys: scope the state-store width
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.collect(),
-            "metric string, source string, metric_type string,"
-            " n_points bigint, sum_value double",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.collect(),
+        "metric string, source string, metric_type string,"
+        " n_points bigint, sum_value double",
+    )
 
 
 @register(
@@ -1600,16 +1395,11 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`ingest_msgpack_roundtrip` is the at-rest twin). Oracle is the
     direct SQL rollup of the deterministic event_id % 5 subset."""
     import base64
-    import http.client
 
     import pandas as pd
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.operators.scale import guarded_wire_pandas
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -1634,22 +1424,9 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         frames.append(bytes(buf))
 
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/msgpack",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/octet-stream;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
-
-    bodies = http_spool_stream(spark, spool).select(
+    headers = {"Content-Type": "application/octet-stream;base64"}
+    requests = ((base64.b64encode(blob), headers) for blob in frames)
+    bodies = _post_http(spark, wd, "/v1/msgpack", requests).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -1672,25 +1449,18 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, n_points bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
 
 
 @register(
@@ -1815,26 +1585,18 @@ def stream_gorilla_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("s_t").alias("sum_ts"),
         F.sum("s_v").alias("sum_v_scaled"),
     )
-    wd = _workdir()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "event_type",
-                F.col("n_blocks").cast("bigint"),
-                F.col("n_points").cast("bigint"),
-                F.col("sum_ts").cast("bigint"),
-                F.col("sum_v_scaled").cast("bigint"),
-            ).collect(),
-            "event_type string, n_blocks bigint, n_points bigint,"
-            " sum_ts bigint, sum_v_scaled bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, _workdir(), state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "event_type",
+            F.col("n_blocks").cast("bigint"),
+            F.col("n_points").cast("bigint"),
+            F.col("sum_ts").cast("bigint"),
+            F.col("sum_v_scaled").cast("bigint"),
+        ).collect(),
+        "event_type string, n_blocks bigint, n_points bigint,"
+        " sum_ts bigint, sum_v_scaled bigint",
+    )
 
 
 @register(
@@ -1862,16 +1624,11 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin). Oracle is the direct SQL rollup of the deterministic
     event_id % 5 = 1 subset."""
     import base64
-    import http.client
 
     import pandas as pd
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.operators.scale import guarded_wire_pandas
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -1900,22 +1657,9 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         frames.append(bytes(buf))
 
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/cbor",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/cbor-seq;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
-
-    bodies = http_spool_stream(spark, spool).select(
+    headers = {"Content-Type": "application/cbor-seq;base64"}
+    requests = ((base64.b64encode(blob), headers) for blob in frames)
+    bodies = _post_http(spark, wd, "/v1/cbor", requests).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -1938,25 +1682,18 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, n_points bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
 
 
 @register(
@@ -1986,16 +1723,11 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`ingest_remote_write` is the at-rest twin). Oracle is the direct
     SQL rollup of the deterministic event_id % 7 = 2 subset."""
     import base64
-    import http.client
 
     import pandas as pd
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.operators.scale import guarded_wire_pandas
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -2026,23 +1758,12 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         bodies64.append(base64.b64encode(encode_remote_write_body(series)))
 
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for b64 in bodies64:
-            conn.request(
-                "POST",
-                "/api/v1/write",
-                body=b64,
-                headers={"Content-Type": "application/x-protobuf;base64",
-                         "Content-Encoding": "snappy"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
-
-    frames = http_spool_stream(spark, spool).select(
+    headers = {
+        "Content-Type": "application/x-protobuf;base64",
+        "Content-Encoding": "snappy",
+    }
+    requests = ((b64, headers) for b64 in bodies64)
+    frames = _post_http(spark, wd, "/api/v1/write", requests).select(
         F.unbase64(F.col("body")).alias("body")
     )
 
@@ -2072,26 +1793,19 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                "dim_type",
-                F.col("n_s").cast("bigint").alias("n_samples"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, dim_type string, n_samples bigint,"
-            " sum_value double, min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "metric",
+            "dim_type",
+            F.col("n_s").cast("bigint").alias("n_samples"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, dim_type string, n_samples bigint,"
+        " sum_value double, min_ts_ms bigint, max_ts_ms bigint",
+    )
 
 
 @register(
@@ -2125,16 +1839,11 @@ def stream_otlp_protobuf_pipeline(
     the direct SQL rollup of the deterministic event_id % 9 = 4
     subset."""
     import base64
-    import http.client
 
     import pandas as pd
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.operators.scale import guarded_wire_pandas
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -2186,22 +1895,9 @@ def stream_otlp_protobuf_pipeline(
         )
         bodies64.append(base64.b64encode(body))
 
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for b64 in bodies64:
-            conn.request(
-                "POST",
-                "/v1/metrics",
-                body=b64,
-                headers={"Content-Type": "application/x-protobuf;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
-
-    frames = http_spool_stream(spark, spool).select(
+    headers = {"Content-Type": "application/x-protobuf;base64"}
+    requests = ((b64, headers) for b64 in bodies64)
+    frames = _post_http(spark, wd, "/v1/metrics", requests).select(
         F.unbase64(F.col("body")).alias("body")
     )
 
@@ -2239,26 +1935,19 @@ def stream_otlp_protobuf_pipeline(
         F.min("t_ns").alias("min_t"),
         F.max("t_ns").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_g").cast("bigint").alias("n_points"),
-                F.col("sum_g").cast("double").alias("sum_gauge"),
-                F.col("sum_c").cast("bigint").alias("sum_counter"),
-                F.col("min_t").alias("min_t_ns"),
-                F.col("max_t").alias("max_t_ns"),
-            ).collect(),
-            "metric string, n_points bigint, sum_gauge double,"
-            " sum_counter bigint, min_t_ns bigint, max_t_ns bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_g").cast("bigint").alias("n_points"),
+            F.col("sum_g").cast("double").alias("sum_gauge"),
+            F.col("sum_c").cast("bigint").alias("sum_counter"),
+            F.col("min_t").alias("min_t_ns"),
+            F.col("max_t").alias("max_t_ns"),
+        ).collect(),
+        "metric string, n_points bigint, sum_gauge double,"
+        " sum_counter bigint, min_t_ns bigint, max_t_ns bigint",
+    )
 
 
 @register(
@@ -2354,21 +2043,13 @@ def stream_alert_for_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "hidx")
     )
     src_dir = os.path.join(wd, "src")
-    os.makedirs(src_dir, exist_ok=True)
-    _write_range_split(true_evals, "hidx", src_dir, num_files=2)
+    write_range_split(true_evals, "hidx", src_dir, num_files=2)
     stream = read_stream_table(spark, src_dir, max_files_per_trigger=1)
     snapshots = alert_for_islands(stream)
     # Key space is |series| (a handful): scope the state store like the
     # sibling stateful queries so a vanilla 200-partition session does
     # not spin 200 state dirs per micro-batch.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(
-            snapshots, os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(snapshots, wd, mode="append", state_partitions=8)
     w = Window.partitionBy("event_type")
     return (
         out.withColumn("_vmax", F.max("version").over(w))
@@ -2404,16 +2085,11 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin), so the oracle's DECIMAL sum of the source column matches
     exactly."""
     import base64
-    import http.client
 
     import pandas as pd
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.operators.scale import guarded_wire_pandas
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -2439,22 +2115,9 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         frames.append(compress_gzip(text.encode("utf-8")))
 
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/gzip",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/gzip;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
-
-    bodies = http_spool_stream(spark, spool).select(
+    headers = {"Content-Type": "application/gzip;base64"}
+    requests = ((base64.b64encode(blob), headers) for blob in frames)
+    bodies = _post_http(spark, wd, "/v1/gzip", requests).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -2481,25 +2144,18 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, n_points bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
 
 
 @register(
@@ -2530,16 +2186,11 @@ def stream_kafka_recordbatch_pipeline(
     connector gate — this pipeline proves the record FORMAT end to
     end without needing the broker."""
     import base64
-    import http.client
 
     import pandas as pd
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.operators.scale import guarded_wire_pandas
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -2565,22 +2216,9 @@ def stream_kafka_recordbatch_pipeline(
             encode_record_batch(records, base_offset=start, compression=bi % 4)
         )
 
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/kafka",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/vnd.kafka.v2;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
-
-    bodies = http_spool_stream(spark, spool).select(
+    headers = {"Content-Type": "application/vnd.kafka.v2;base64"}
+    requests = ((base64.b64encode(blob), headers) for blob in frames)
+    bodies = _post_http(spark, wd, "/v1/kafka", requests).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -2609,25 +2247,18 @@ def stream_kafka_recordbatch_pipeline(
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "dim_type",
-                F.col("n_r").cast("bigint").alias("n_records"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "dim_type string, n_records bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "dim_type",
+            F.col("n_r").cast("bigint").alias("n_records"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "dim_type string, n_records bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
 
 
 @register(
@@ -2656,16 +2287,11 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     an honest micro-batch bound). `ingest_otlp_logs` is the at-rest
     twin."""
     import base64
-    import http.client
 
     import pandas as pd
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.operators.scale import guarded_wire_pandas
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -2703,22 +2329,9 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_logs_request({"service.name": "events"}, "mps", records)
         )
 
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/metrics",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/x-protobuf;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
-
-    bodies = http_spool_stream(spark, spool).select(
+    headers = {"Content-Type": "application/x-protobuf;base64"}
+    requests = ((base64.b64encode(blob), headers) for blob in frames)
+    bodies = _post_http(spark, wd, "/v1/metrics", requests).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -2740,25 +2353,18 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("t_ns").alias("min_t"),
         F.max("t_ns").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                F.col("sev").alias("severity_number"),
-                F.col("n_r").cast("bigint").alias("n_records"),
-                F.col("sum_u").cast("bigint").alias("sum_user"),
-                F.col("min_t").alias("min_t_ns"),
-                F.col("max_t").alias("max_t_ns"),
-            ).collect(),
-            "severity_number int, n_records bigint, sum_user bigint,"
-            " min_t_ns long, max_t_ns long",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            F.col("sev").alias("severity_number"),
+            F.col("n_r").cast("bigint").alias("n_records"),
+            F.col("sum_u").cast("bigint").alias("sum_user"),
+            F.col("min_t").alias("min_t_ns"),
+            F.col("max_t").alias("max_t_ns"),
+        ).collect(),
+        "severity_number int, n_records bigint, sum_user bigint,"
+        " min_t_ns long, max_t_ns long",
+    )
 
 
 @register(
@@ -2790,16 +2396,11 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical doubles (the divergence suite's repr-roundtrip
     pin)."""
     import base64
-    import http.client
 
     import pandas as pd
 
     from metricproxy_spark.io import ensure_package_on_workers, load_table
     from metricproxy_spark.operators.scale import guarded_wire_pandas
-    from metricproxy_spark.streaming.httplistener import (
-        HttpIngestListener,
-        http_spool_stream,
-    )
 
     ensure_package_on_workers(spark)
     wd = _workdir()
@@ -2835,22 +2436,9 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             blob = compress_zstd(raw)
         frames.append(blob)
 
-    spool = os.path.join(wd, "spool")
-    with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/zstd",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/zstd;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
-
-    bodies = http_spool_stream(spark, spool).select(
+    headers = {"Content-Type": "application/zstd;base64"}
+    requests = ((base64.b64encode(blob), headers) for blob in frames)
+    bodies = _post_http(spark, wd, "/v1/zstd", requests).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -2877,25 +2465,18 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, n_points bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    out = _run_to_memory(agg, wd, state_partitions=8)
+    return spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
 
 
 @register(
@@ -2932,97 +2513,95 @@ def stream_delta_commit_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import uuid
 
-    from metricproxy_spark.streaming.source import (
-        read_stream_table,
-        stage_stream_source,
-    )
-
     wd = _workdir()
-    src = stage_stream_source(
-        spark,
-        sf_dir,
-        "events",
-        os.path.join(wd, "src"),
-        num_files=4,
-        order_col="event_id",
-    )
-    stream = read_stream_table(spark, src, max_files_per_trigger=1).where(
-        F.col("event_id") % 7 == 1
-    )
-    table_dir = os.path.join(wd, "delta_table")
-    log_dir = os.path.join(table_dir, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-
-    def commit_batch(bdf, bid: int) -> None:
-        rel = f"part-{bid:05d}"
-        out = bdf.select("event_id", "event_type", "user_id", "value")
-        out.write.mode("overwrite").parquet(os.path.join(table_dir, rel))
-        n = spark.read.parquet(os.path.join(table_dir, rel)).count()
-        actions = []
-        if bid == 0:
-            actions.append({"protocol": {"minReaderVersion": 1}})
-            actions.append({"metaData": {"id": "mps-stream-delta"}})
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    "dataChange": True,
-                    "stats": _json.dumps({"numRecords": n}),
-                }
-            }
+    try:
+        src = stage_stream_source(
+            spark,
+            sf_dir,
+            "events",
+            os.path.join(wd, "src"),
+            num_files=4,
+            order_col="event_id",
         )
-        final = os.path.join(log_dir, f"{bid:020d}.json")
-        # Per-attempt PRIVATE temp name: a shared ".tmp" would let a
-        # contending writer truncate the file between our write and
-        # link, publishing a half-written commit.
-        tmp = f"{final}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(_json.dumps(a) for a in actions) + "\n")
-        # Put-if-absent via link(2): hard-link fails with EEXIST if the
-        # version file already exists (a retried batch), making the
-        # commit idempotent — the same discipline as spool.SpoolPublisher.
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            pass  # an earlier attempt already committed this batch id
-        finally:
-            os.unlink(tmp)
+        stream = read_stream_table(spark, src, max_files_per_trigger=1).where(
+            F.col("event_id") % 7 == 1
+        )
+        table_dir = os.path.join(wd, "delta_table")
+        log_dir = os.path.join(table_dir, "_delta_log")
+        os.makedirs(log_dir, exist_ok=True)
 
-    q = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", os.path.join(wd, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def commit_batch(bdf, bid: int) -> None:
+            rel = f"part-{bid:05d}"
+            out = bdf.select("event_id", "event_type", "user_id", "value")
+            out.write.mode("overwrite").parquet(os.path.join(table_dir, rel))
+            n = spark.read.parquet(os.path.join(table_dir, rel)).count()
+            actions = []
+            if bid == 0:
+                actions.append({"protocol": {"minReaderVersion": 1}})
+                actions.append({"metaData": {"id": "mps-stream-delta"}})
+            actions.append(
+                {
+                    "add": {
+                        "path": rel,
+                        "dataChange": True,
+                        "stats": _json.dumps({"numRecords": n}),
+                    }
+                }
+            )
+            final = os.path.join(log_dir, f"{bid:020d}.json")
+            # Per-attempt PRIVATE temp name: a shared ".tmp" would let a
+            # contending writer truncate the file between our write and
+            # link, publishing a half-written commit.
+            tmp = f"{final}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp"
+            with open(tmp, "w") as fh:
+                fh.write("\n".join(_json.dumps(a) for a in actions) + "\n")
+            # Put-if-absent via link(2): hard-link fails with EEXIST if
+            # the version file already exists (a retried batch), making
+            # the commit idempotent — the same discipline as
+            # spool.SpoolPublisher.
+            try:
+                os.link(tmp, final)
+            except FileExistsError:
+                pass  # an earlier attempt already committed this batch id
+            finally:
+                os.unlink(tmp)
 
-    # --- the log-replay reader over what the stream committed ---
-    log = spark.read.json(os.path.join(log_dir, "*.json")).withColumn(
-        "version",
-        F.regexp_extract(F.input_file_name(), r"(\d{20})\.json", 1).cast(
-            "bigint"
-        ),
-    )
-    adds = log.where(F.col("add").isNotNull()).select(
-        F.col("add.path").alias("path")
-    )
-    paths = [
-        os.path.join(table_dir, r["path"])
-        for r in adds.collect()  # bounded: the commit-log file list
-    ]
-    snap = spark.read.parquet(*paths)
-    result = snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(27,4)"))
-        .cast("double")
-        .alias("sum_value"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
-    out = spark.createDataFrame(
-        result.collect(),
-        "event_type string, n_events bigint, sum_value double,"
-        " min_id bigint, max_id bigint",
-    )
-    shutil.rmtree(wd, ignore_errors=True)
+        q = (
+            stream.writeStream.foreachBatch(commit_batch)
+            .option("checkpointLocation", os.path.join(wd, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+        # --- the log-replay reader over what the stream committed ---
+        log = spark.read.json(os.path.join(log_dir, "*.json")).withColumn(
+            "version",
+            F.regexp_extract(F.input_file_name(), r"(\d{20})\.json", 1).cast(
+                "bigint"
+            ),
+        )
+        adds = log.where(F.col("add").isNotNull()).select(
+            F.col("add.path").alias("path")
+        )
+        paths = [
+            os.path.join(table_dir, r["path"])
+            for r in adds.collect()  # bounded: the commit-log file list
+        ]
+        snap = spark.read.parquet(*paths)
+        result = snap.groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(27,4)"))
+            .cast("double")
+            .alias("sum_value"),
+            F.min("event_id").alias("min_id"),
+            F.max("event_id").alias("max_id"),
+        )
+        out = spark.createDataFrame(
+            result.collect(),
+            "event_type string, n_events bigint, sum_value double,"
+            " min_id bigint, max_id bigint",
+        )
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
     return out

@@ -12,8 +12,13 @@ line + headers + body, gzip still encoded) as one file in a spool
 directory. Everything downstream is then the normal engine:
 
 - batch: ``spark.read.format("httpwire").option("path", spool)``
-- streaming: ``readStream`` on the same connector — newly accepted
-  requests become micro-batch rows exactly once (checkpointed offset).
+- streaming: ``readStream`` on the same connector
+  (:func:`http_spool_stream`) — newly accepted requests become
+  micro-batch rows exactly once (checkpointed offset).
+
+:func:`post_bodies` is the client side of the wire (one keep-alive
+connection, raising on any refusal), the HTTP twin of
+:func:`metricproxy_spark.streaming.socketlistener.send_lines_tcp`.
 
 This is deliberately the Kafka split: the listener is a durable
 network terminator (accept → fsync-able spool → 200 OK), Spark is the
@@ -25,7 +30,9 @@ Responses mirror the reference: ``"OK"`` for datapoint POSTs, plain
 ``OK`` for ``/healthz`` (S7), 404 otherwise. A POST must carry a
 ``Content-Length``: the spool stores one sized body per request, so a
 missing length is refused with 411 and a malformed one with 400, and
-neither is spooled. Accepted requests are published through
+neither is spooled. :class:`RemoteReadServer` shares the same handler
+base, so both doors frame bodies by the same rule. Accepted requests
+are published through
 :class:`metricproxy_spark.sources.spool.SpoolPublisher` (atomic,
 sequence-numbered, never clobbering), so concurrent connections and
 listener processes sharing one spool never interleave or overwrite.
@@ -33,7 +40,9 @@ listener processes sharing one spool never interleave or overwrite.
 
 from __future__ import annotations
 
+import http.client
 import threading
+from collections.abc import Iterable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,9 +65,9 @@ INGEST_PATHS = (
 )
 
 
-class _IngestHandler(BaseHTTPRequestHandler):
-    # set per-server via a subclass attribute
-    listener: "HttpIngestListener"
+class _Handler(BaseHTTPRequestHandler):
+    """What both doors share: quiet logging, ``GET /healthz`` (S7) and
+    the sized-body read."""
 
     def log_message(self, *_a) -> None:  # quiet; stats are counted
         pass
@@ -74,20 +83,33 @@ class _IngestHandler(BaseHTTPRequestHandler):
         else:
             self.send_error(404)
 
+    def read_sized_body(self) -> bytes | None:
+        """The POST body framed by ``Content-Length``, or None once the
+        request has been refused: 411 when the length is missing (e.g.
+        chunked), 400 when it is not a non-negative integer."""
+        clen = self.headers.get("Content-Length")
+        if clen is None:
+            self.send_error(411)
+            return None
+        clen = clen.strip()
+        if not (clen.isascii() and clen.isdigit()):
+            self.send_error(400, "Invalid Content-Length")
+            return None
+        return self.rfile.read(int(clen))
+
+
+class _IngestHandler(_Handler):
+    # set per-server via a subclass attribute
+    listener: "HttpIngestListener"
+
     def do_POST(self) -> None:
         path = self.path.split("?")[0]
         if path not in INGEST_PATHS:
             self.send_error(404)
             return
-        clen = self.headers.get("Content-Length")
-        if clen is None:
-            self.send_error(411)  # e.g. chunked: no sized body to spool
+        body = self.read_sized_body()
+        if body is None:
             return
-        clen = clen.strip()
-        if not (clen.isascii() and clen.isdigit()):
-            self.send_error(400, "Invalid Content-Length")
-            return
-        body = self.rfile.read(int(clen))
         # Reconstruct the request verbatim (body still gzip-encoded if
         # the client sent it that way) — the httpwire reader owns all
         # decoding, so live and at-rest requests share one code path.
@@ -174,6 +196,31 @@ def http_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
     )
 
 
+def post_bodies(
+    host: str,
+    port: int,
+    path: str,
+    requests: Iterable[tuple[bytes, dict[str, str]]],
+) -> None:
+    """Bounded load generator, the HTTP twin of
+    :func:`metricproxy_spark.streaming.socketlistener.send_lines_tcp`:
+    POST every ``(body, headers)`` pair to ``path`` over one keep-alive
+    connection. Raises ``ConnectionError`` on any reply other than
+    200 ``"OK"`` — a refused request never passes silently."""
+    conn = http.client.HTTPConnection(host, port, timeout=30)
+    try:
+        for body, headers in requests:
+            conn.request("POST", path, body=body, headers=headers)
+            resp = conn.getresponse()
+            reply = resp.read()
+            if resp.status != 200 or reply != b'"OK"':
+                raise ConnectionError(
+                    f"listener refused POST {path}: {resp.status} {reply!r}"
+                )
+    finally:
+        conn.close()
+
+
 class RemoteReadServer:
     """A LIVE prometheus remote-read SERVER (``POST /api/v1/read``).
 
@@ -231,27 +278,14 @@ class RemoteReadServer:
     def start(self) -> tuple[str, int]:
         server_ref = self
 
-        class _ReadHandler(BaseHTTPRequestHandler):
-            def log_message(self, *_a) -> None:
-                pass
-
-            def do_GET(self) -> None:
-                if self.path.split("?")[0] == "/healthz":
-                    body = b"OK"
-                    self.send_response(200)
-                    self.send_header("Content-Type", "text/plain")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
-                else:
-                    self.send_error(404)
-
+        class _ReadHandler(_Handler):
             def do_POST(self) -> None:
                 if self.path.split("?")[0] != "/api/v1/read":
                     self.send_error(404)
                     return
-                clen = int(self.headers.get("Content-Length") or 0)
-                raw = self.rfile.read(clen)
+                raw = self.read_sized_body()
+                if raw is None:
+                    return
                 try:
                     resp = server_ref._answer(raw)
                 except ValueError:

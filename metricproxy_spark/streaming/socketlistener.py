@@ -11,7 +11,10 @@ for HTTP bodies. The spool is ``carbonwire``-readable (plain text,
 one line per record), so the SAME byte-range-splitting connector and
 the SAME JVM-side parsers serve both the at-rest and the live path —
 live ingest evidence is therefore value-checkable against the batch
-twin's oracle.
+twin's oracle. :func:`send_lines_tcp` is the client side of the wire
+and :func:`line_spool_stream` the spool's exactly-once stream — the
+twins of ``httplistener.post_bodies`` and
+``httplistener.http_spool_stream``.
 
 Two transports:
 
@@ -28,8 +31,12 @@ from __future__ import annotations
 import socket
 import socketserver
 import threading
+from typing import TYPE_CHECKING
 
 from metricproxy_spark.sources.spool import SpoolPublisher
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 class LineSocketListener:
@@ -168,3 +175,18 @@ def send_lines_tcp(
             ack = s.recv(16)
             if not ack.startswith(b"OK"):
                 raise ConnectionError(f"listener did not ack: {ack!r}")
+
+
+def line_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
+    """The listener's spool as a stream: one ``line`` row per spooled
+    line, exactly once (carbonwire's checkpointed file offset) — the
+    twin of :func:`metricproxy_spark.streaming.httplistener.
+    http_spool_stream`; compose with the line parsers."""
+    from metricproxy_spark.sources.pyds import register_carbonwire
+
+    register_carbonwire(spark)
+    return (
+        spark.readStream.format("carbonwire")
+        .option("path", spool_dir)
+        .load()
+    )

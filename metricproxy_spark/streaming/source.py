@@ -52,39 +52,37 @@ def stage_stream_source(
             _bump_mtimes(path, seq)
             seq += 1
         return out_dir
-    # Range-split in ONE write job per copy: repartitionByRange gives
-    # contiguous, ordered ranges (partition i's keys all <= partition
-    # i+1's; equal keys never split), and the writer emits the range
-    # files as part-0000N in partition order — the exact property the
-    # old per-range filter loop bought with an approxQuantile probe
-    # plus num_files separate write jobs (measured ~0.5 s/job of pure
-    # staging overhead). Explicit numPartitions is never coalesced by
-    # AQE, so the file count is pinned.
-    from pyspark.sql import functions as F
-
     for c in range(copies):
-        path = os.path.join(out_dir, f"ranged_{c:04d}")
-        df.repartitionByRange(num_files, F.col(order_col)).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _bump_part_file_mtimes(path, base_seq=c * num_files)
-        seq += num_files
+        write_range_split(
+            df,
+            order_col,
+            os.path.join(out_dir, f"ranged_{c:04d}"),
+            num_files,
+            base_seq=c * num_files,
+        )
     return out_dir
 
 
-def _bump_mtimes(path: str, seq: int) -> None:
-    """File source orders files by modification time; make it explicit
-    (same-second writes would otherwise tie-break arbitrarily)."""
-    base = time.time() - 10_000
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            os.utime(os.path.join(root, f), (base + seq, base + seq))
+def write_range_split(
+    df: DataFrame, order_col: str, path: str, num_files: int, base_seq: int = 0
+) -> None:
+    """Write ``df`` to ``path`` as ``num_files`` parquet files
+    range-partitioned on ``order_col``, with modification times rising
+    with the range (from ``base_seq``), so a ``maxFilesPerTrigger=1``
+    replay sees micro-batches in ``order_col`` order.
 
+    ONE write job: repartitionByRange yields contiguous ordered ranges
+    (every key in partition i <= every key in partition i+1, equal keys
+    never split) and the writer emits them as part-0000N in partition
+    order. An explicit numPartitions is never coalesced by AQE, so the
+    file count stays pinned; an EMPTY input still stages schema-bearing
+    files."""
+    from pyspark.sql import functions as F
 
-def _bump_part_file_mtimes(path: str, base_seq: int = 0) -> None:
-    """Per-FILE mtime bump for a single ranged write: part-00000 <
-    part-00001 < ... by filename is the range order, so replay order
-    (file-source mtime sort) must follow it."""
+    df.repartitionByRange(num_files, F.col(order_col)).write.mode(
+        "overwrite"
+    ).parquet(path)
+    # the file source orders by mtime; part-0000N by name is range order
     base = time.time() - 10_000
     parts = sorted(
         f
@@ -94,6 +92,15 @@ def _bump_part_file_mtimes(path: str, base_seq: int = 0) -> None:
     for i, f in enumerate(parts):
         t = base + base_seq + i
         os.utime(os.path.join(path, f), (t, t))
+
+
+def _bump_mtimes(path: str, seq: int) -> None:
+    """File source orders files by modification time; make it explicit
+    (same-second writes would otherwise tie-break arbitrarily)."""
+    base = time.time() - 10_000
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            os.utime(os.path.join(root, f), (base + seq, base + seq))
 
 
 def carbon_socket_stream(

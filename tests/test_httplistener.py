@@ -9,6 +9,9 @@ import http.client
 import json
 import os
 import socket
+import subprocess
+import sys
+import textwrap
 import threading
 
 import pytest
@@ -16,8 +19,12 @@ import pytest
 from metricproxy_spark.sources.httpwire import register_httpwire
 from metricproxy_spark.streaming.httplistener import (
     HttpIngestListener,
+    RemoteReadServer,
     http_spool_stream,
+    post_bodies,
 )
+
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _post(host, port, path, body: bytes, headers=None):
@@ -57,33 +64,104 @@ def test_healthz_and_unknown_route(tmp_path):
         assert lis.accepted == 0  # neither route spools
 
 
+_FRAMINGS = [
+    ("non_integer", b"Content-Length: abc\r\n", 400),
+    ("negative", b"Content-Length: -1\r\n", 400),
+    ("chunked_no_length", b"Transfer-Encoding: chunked\r\n", 411),
+]
+
+
+def _ingest_door(tmp_path):
+    spool = str(tmp_path / "spool")
+    lis = HttpIngestListener(spool)
+
+    def untouched():
+        return lis.accepted == 0 and os.listdir(spool) == []
+
+    return lis, "/v2/datapoint", untouched
+
+
+def _read_door(_tmp_path):
+    srv = RemoteReadServer([({"__name__": "m"}, [(1.0, 100)])])
+    return srv, "/api/v1/read", lambda: srv.served == 0
+
+
 @pytest.mark.parametrize(
-    "framing, status",
+    "door, framing, status",
     [
-        (b"Content-Length: abc\r\n", 400),
-        (b"Content-Length: -1\r\n", 400),
-        (b"Transfer-Encoding: chunked\r\n", 411),
+        # the ingest door keeps the bare framing ids it was written with
+        pytest.param(door, framing, status, id=prefix + fid)
+        for prefix, door in (("", _ingest_door), ("remote_read-", _read_door))
+        for fid, framing, status in _FRAMINGS
     ],
-    ids=["non_integer", "negative", "chunked_no_length"],
 )
 def test_post_without_a_valid_content_length_is_refused(
-    tmp_path, framing, status
+    tmp_path, door, framing, status
 ):
-    """The spool stores one sized body per request: a POST whose
-    Content-Length is malformed (400) or missing (411) is answered at
-    once and spools nothing."""
-    spool = str(tmp_path / "spool")
-    with HttpIngestListener(spool) as lis:
-        with socket.create_connection((lis.host, lis.port), timeout=10) as s:
+    """Both doors frame a POST body by Content-Length: one that is
+    malformed (400) or missing (411) is answered at once, and the
+    request is neither spooled nor served. Before the shared check the
+    read door crashed on ``abc``, blocked on ``-1`` and answered 400 to
+    a chunked body."""
+    server, path, untouched = door(tmp_path)
+    with server:
+        with socket.create_connection(
+            (server.host, server.port), timeout=10
+        ) as s:
             s.sendall(
-                b"POST /v2/datapoint HTTP/1.1\r\nHost: ingest\r\n"
-                b"Content-Type: application/json\r\n" + framing + b"\r\n"
+                f"POST {path} HTTP/1.1\r\nHost: ingest\r\n".encode()
+                + b"Content-Type: application/json\r\n" + framing + b"\r\n"
             )
             with s.makefile("rb") as resp:
                 status_line = resp.readline()
         assert status_line.split()[1] == str(status).encode(), status_line
-        assert lis.accepted == 0
-    assert os.listdir(spool) == []
+    assert untouched()
+
+
+def test_post_bodies_raises_on_refusal(tmp_path):
+    """The wire client raises on any reply other than 200 "OK" — here
+    a 404 for an unknown route — instead of trusting an assert."""
+    with HttpIngestListener(str(tmp_path / "spool")) as lis:
+        post_bodies(
+            lis.host, lis.port, "/v2/datapoint", [(_v2_body([]), {})]
+        )
+        with pytest.raises(ConnectionError, match="404"):
+            post_bodies(lis.host, lis.port, "/nope", [(b"{}", {})])
+        assert lis.accepted == 1
+
+
+def test_post_bodies_under_python_O(tmp_path):
+    """``python -O`` strips asserts: the client must still read every
+    reply (three POSTs on one keep-alive connection) and still raise on
+    a refusal. Runs in a subprocess, without Spark."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO_DIR!r})
+        assert False, "asserts must be stripped under -O"
+        from metricproxy_spark.streaming.httplistener import (
+            HttpIngestListener, post_bodies,
+        )
+        with HttpIngestListener({str(tmp_path / "spool")!r}) as lis:
+            post_bodies(lis.host, lis.port, "/v2/datapoint",
+                        [(b'{{"gauge": []}}', {{}})] * 3)
+            try:
+                post_bodies(lis.host, lis.port, "/nope", [(b"{{}}", {{}})])
+            except ConnectionError:
+                refused = True
+            else:
+                refused = False
+        print(lis.accepted, refused)
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-O", "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["3", "True"]
 
 
 def test_live_post_plain_and_gzip_roundtrip(spark, tmp_path):

@@ -653,3 +653,22 @@ def test_pipeline_crash_recovery_exactly_once(spark, tmp_path):
     run()  # restart from the SAME checkpoint
     assert sorted(delivered) == list(range(90))
     assert len(delivered) == len(set(delivered))  # no duplicates
+
+
+def test_streamed_queries_remove_their_workdirs(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A streamed query's workdir (staged source or wire spool plus the
+    checkpoint) is removed once its stream has stopped, and the result
+    (held by the memory sink) still reads afterwards."""
+    import tempfile
+
+    import __spark_entry__ as spark_entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    queries = spark_entry.queries()
+    for name in ("stream_tumbling_stats", "stream_statsd_pipeline"):
+        assert queries[name](spark, sf_dir).count() > 0, name
+    assert [
+        p.name for p in tmp_path.iterdir() if p.name.startswith("mps_stream_")
+    ] == []
